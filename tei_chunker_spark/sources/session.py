@@ -3,10 +3,15 @@
 Every knob here is output-neutral (JobConfig separation): AQE for runtime
 coalescing/skew-join splitting, Arrow for all pandas-UDF traffic, small
 Arrow batches because rows are whole documents, and reused Python workers
-so the per-task interpreter cost amortizes.  On a real cluster the same
-function is used from ``spark-submit --py-files``; master is inherited from
-the submit environment unless explicitly forced (tests/bench force
-``local[N]`` to evidence the two-cluster-size scaling rule).
+so interpreter start-up and imports are paid once per worker, not per
+task.  Reuse alone did not make a task cheap: on Python < 3.12 every task
+re-read every zip on the worker's ``sys.path`` (~250 ms for pyspark.zip)
+until the guard in ``tei_chunker_spark/__init__.py``, installed when a
+worker imports the package, limited that to the worker's first task.
+On a real cluster the same function is used from ``spark-submit
+--py-files``; master is inherited from the submit environment unless
+explicitly forced (tests/bench force ``local[N]`` to evidence the
+two-cluster-size scaling rule).
 """
 from __future__ import annotations
 

@@ -7,6 +7,7 @@ catalog instead (format chosen by JobConfig.input_format).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -72,17 +73,22 @@ def table_size(sf_dir: str, name: str) -> int:
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Footer row count of a registry table (0 when unknown) — metadata
-    only, memoized; the widen="auto" gate's compute-volume proxy."""
+    only, memoized; the widen="auto" gate's compute-volume proxy.  A
+    failed read warns and is not memoized, so the next call retries."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     n = _ROWS_MEMO.get(path)
     if n is None:
         try:
             import pyarrow.parquet as pq
 
-            n = pq.ParquetFile(path).metadata.num_rows
-        except Exception:
+            n = _ROWS_MEMO[path] = pq.ParquetFile(path).metadata.num_rows
+        except Exception as e:  # a size hint: never fail the query over it
+            warnings.warn(
+                f"footer row count of {path} unreadable ({e!r}); "
+                'widen="auto" leaves this scan narrow',
+                RuntimeWarning,
+            )
             n = 0
-        _ROWS_MEMO[path] = n
     return n
 
 
@@ -114,7 +120,10 @@ def load(
     """``widen=True``: fan the scan out whenever the file is under the
     byte cap.  ``widen="auto"``: additionally require the footer row
     count to clear _WIDEN_MIN_ROWS — for cheap-per-row consumers where
-    the exchange only pays for itself once the table is large."""
+    the exchange only pays for itself once the table is large.  Any
+    other ``widen`` raises ValueError."""
+    if widen is not False and widen is not True and widen != "auto":
+        raise ValueError(f'widen must be False, True or "auto", not {widen!r}')
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")

@@ -4,6 +4,7 @@ rows as its straightforward formulation.
 """
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tei_chunker_spark.operators import dedup
@@ -114,6 +115,36 @@ def test_widen_small_row_floor(spark):
     plain = tables.load(spark, "/root/testdata/sf0.01", "documents")
     assert narrow.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
     assert tables.table_rows("/root/testdata/sf0.01", "documents") > 0
+
+
+def test_load_rejects_unknown_widen():
+    """A typo in the widen flag fails loudly instead of widening."""
+    from tei_chunker_spark.sources import tables
+
+    for bad in ("Auto", "true", 1, None):
+        with pytest.raises(ValueError, match="widen"):
+            tables.load(None, "/nonexistent", "documents", widen=bad)
+
+
+def test_table_rows_memoizes_only_successful_reads(tmp_path):
+    """An unreadable footer warns and is retried on the next call; the
+    count is memoized once a read succeeds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tei_chunker_spark.sources import tables
+
+    path = tmp_path / "documents.parquet"
+    path.write_bytes(b"not parquet")
+    with pytest.warns(RuntimeWarning, match="footer row count"):
+        assert tables.table_rows(str(tmp_path), "documents") == 0
+    assert str(path) not in tables._ROWS_MEMO
+    pq.write_table(pa.table({"doc_id": ["a", "b", "c"]}), str(path))
+    try:
+        assert tables.table_rows(str(tmp_path), "documents") == 3
+        assert tables._ROWS_MEMO[str(path)] == 3
+    finally:
+        tables._ROWS_MEMO.pop(str(path), None)
 
 
 def test_norm_precompute_cosine_bit_identical(spark):
