@@ -630,7 +630,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ["rank"],
     )
     q["ann_ivf_multiprobe"] = lambda spark, sf: _cast_long(
-        kmeans.ann_ivf_multiprobe_topk(
+        kmeans.ann_ivf_trained_topk(
             load(spark, sf, "embeddings", widen=True),
             load(spark, sf, "embeddings").filter(F.col("vec_id") < 5),
             k=10,
@@ -836,7 +836,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ["rank"],
     )
     q["ivf_pq_multiprobe"] = lambda spark, sf: _cast_long(
-        quantize.ivf_pq_multiprobe_topk(
+        quantize.ivf_pq_topk(
             load(spark, sf, "embeddings", widen=True),
             load(spark, sf, "embeddings").filter(F.col("vec_id") < 5),
             k=10,

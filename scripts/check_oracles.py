@@ -18,6 +18,8 @@ import os
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _git_head() -> str:
     try:
@@ -25,7 +27,7 @@ def _git_head() -> str:
 
         return subprocess.run(
             ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=10,
+            capture_output=True, text=True, cwd=ROOT, timeout=10,
         ).stdout.strip()
     except Exception:
         return ""
@@ -33,7 +35,7 @@ def _git_head() -> str:
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from tei_chunker_spark.sources.session import get_spark  # noqa: E402
@@ -127,7 +129,7 @@ def main() -> None:
     print()
 
     out_path = os.environ.get("TEI_ORACLES_OUT") or (
-        None if only else "/root/repo/ORACLES_latest.json"
+        None if only else os.path.join(ROOT, "ORACLES_latest.json")
     )
     if out_path:
         artifact = {}

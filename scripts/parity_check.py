@@ -9,11 +9,12 @@ Run: python scripts/parity_check.py
 """
 from __future__ import annotations
 
+import os
 import random
 import sys
 import types
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # The reference imports loguru, absent in this container; stub it.
 if "loguru" not in sys.modules:

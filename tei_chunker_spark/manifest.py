@@ -16,9 +16,9 @@ instead survive restarts.  Design:
   attempt auditable.
 * the runner processes buckets in **waves** (each wave = one Spark action +
   one manifest append).  A kill between waves loses at most the in-flight
-  wave; the next run anti-joins the input against completed buckets
-  (broadcast — the manifest is tiny relative to the input) and only
-  processes the remainder.  On a 1000-executor cluster you'd size
+  wave; the next run reads the completed buckets from the manifest and
+  only processes the remainder, each wave selecting its own buckets with
+  an ``isin`` predicate.  On a 1000-executor cluster you'd size
   num_buckets in the thousands and waves to a few minutes of work each.
 """
 from __future__ import annotations
@@ -67,20 +67,6 @@ def append_manifest(spark: SparkSession, path: str, rows: Sequence[dict]) -> Non
     spark.createDataFrame(rows, MANIFEST_SCHEMA_DDL).coalesce(1).write.mode(
         "append"
     ).parquet(path)
-
-
-def resume_filter(input_df: DataFrame, done: Sequence[int], num_buckets: int) -> DataFrame:
-    """Drop documents whose bucket already completed.
-
-    Semantically a broadcast left-anti join against the manifest; because
-    the completed set is a small list of ints we fold it to a NOT-isin
-    predicate, which Catalyst pushes into the scan (partition pruning when
-    the input table is bucket-partitioned — the 100 TB fast path)."""
-    if not done:
-        return input_df
-    return input_df.withColumn("bucket", bucket_column(num_buckets)).filter(
-        ~F.col("bucket").isin(list(done))
-    ).drop("bucket")
 
 
 def run_resumable(

@@ -97,10 +97,6 @@ def minhash_signatures_from(
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(documents: DataFrame, n: int = 2) -> DataFrame:
-    return minhash_signatures_from(shingle_table(documents, n))
-
-
 def jaccard_pairs(
     shingles: DataFrame,
     candidates: DataFrame = None,
@@ -1164,11 +1160,11 @@ def semantic_dedup(
     occupancy and raises if any cell exceeds the bound (same discipline
     as jaccard's max_shingle_df).  Default None: no extra job, output
     byte-identical either way — results never depend on the knob."""
-    from .kmeans import _cents_literal, _with_cell, quantized, train_ivf_centroids
+    from .kmeans import cents_literal, quantized, train_ivf_centroids, with_cell
 
     cents = train_ivf_centroids(embeddings, n_cells=n_cells, iters=iters)
     q = embeddings.select("vec_id", "embedding", quantized("embedding").alias("qv"))
-    cells = _with_cell(q, cents)
+    cells = with_cell(q, cents)
     if max_cell_rows is not None:
         hot = (
             cells.groupBy("cell")
@@ -1202,7 +1198,7 @@ def semantic_dedup(
     # per-pair cosine_safe).
     cs = (
         cells.withColumn(
-            "cv", F.expr(f"element_at({_cents_literal(cents)}, cell + 1)")
+            "cv", F.expr(f"element_at({cents_literal(cents)}, cell + 1)")
         )
         .select(
             "vec_id",

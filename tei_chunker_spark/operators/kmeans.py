@@ -34,8 +34,7 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.columns import cosine
-from .similarity import _ranked, cosine_from_norms, with_norm
+from .similarity import _ranked, cell_pairs
 
 QUANT_SCALE = 10000
 
@@ -48,7 +47,7 @@ def quantized(vec_col: str = "embedding") -> F.Column:
     )
 
 
-def _cents_literal(centroids: Sequence[Sequence[int]]) -> str:
+def cents_literal(centroids: Sequence[Sequence[int]]) -> str:
     """SQL literal array<array<bigint>> for the broadcast centroids."""
     inner = ", ".join(
         "array({})".format(", ".join(f"{int(v)}L" for v in c)) for c in centroids
@@ -56,23 +55,31 @@ def _cents_literal(centroids: Sequence[Sequence[int]]) -> str:
     return f"array({inner})"
 
 
-def _with_cell(q: DataFrame, centroids: Sequence[Sequence[int]]) -> DataFrame:
+def l2sq_dists(centroids: Sequence[Sequence[int]], vec: str = "qv") -> str:
+    """SQL array<bigint>: exact integer L2^2 from the bound integer vector
+    ``vec`` to each centroid, indexed by cell id.  The one spelling of the
+    assignment distance — the IVF cells, the probes and the PQ subspaces
+    all build theirs here."""
+    return (
+        f"transform({cents_literal(centroids)}, cv -> "
+        f"aggregate(zip_with({vec}, cv, (x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v))"
+    )
+
+
+def argmin(arr: str) -> F.Column:
+    """0-based index of the smallest element of SQL array ``arr``, ties to
+    the smallest index (array_position returns the FIRST match)."""
+    return (F.expr(f"array_position({arr}, array_min({arr}))") - 1).cast("int")
+
+
+def with_cell(q: DataFrame, centroids: Sequence[Sequence[int]]) -> DataFrame:
     """(…, qv) -> + cell: argmin integer L2^2 to the centroid list, ties to
-    the smallest cell id (array_position returns the FIRST index of the
-    min).  The distance array is materialized behind a generator barrier so
-    the min and the position lookup don't each recompute k distances."""
-    dists = (
-        f"transform({_cents_literal(centroids)}, cv -> "
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v))"
-    )
+    the smallest cell id.  The distance array is materialized behind a
+    generator barrier so the min and the position lookup don't each
+    recompute k distances."""
     return q.select(
-        "*", F.explode(F.array(F.expr(dists))).alias("_dists")
-    ).select(
-        *q.columns,
-        (F.expr("array_position(_dists, array_min(_dists))") - 1)
-        .cast("int")
-        .alias("cell"),
-    )
+        "*", F.explode(F.array(F.expr(l2sq_dists(centroids)))).alias("_dists")
+    ).select(*q.columns, argmin("_dists").alias("cell"))
 
 
 def train_ivf_centroids(
@@ -93,7 +100,7 @@ def train_ivf_centroids(
     dim = len(cents[0])
     for _ in range(iters):
         sums = (
-            _with_cell(q, cents)
+            with_cell(q, cents)
             .select("cell", F.posexplode("qv").alias("i", "v"))
             .groupBy("cell", "i")
             .agg(F.sum("v").alias("sv"), F.count(F.lit(1)).alias("n"))
@@ -117,7 +124,7 @@ def assign_cells(
     shuffle — at scale this is the write path that buckets/partitions the
     corpus by cell so probes prune to one cell's files)."""
     q = embeddings.select("*", quantized(vec_col).alias("qv"))
-    return _with_cell(q, centroids).drop("qv")
+    return with_cell(q, centroids).drop("qv")
 
 
 def _with_probe_cells(
@@ -128,13 +135,9 @@ def _with_probe_cells(
     (identical to the single-cell rule, extended to a prefix).  The
     (distance, cell) structs sort lexicographically, so array_sort IS the
     tie-broken ranking; all per-row, broadcast centroids, no shuffle."""
-    dists = (
-        f"transform({_cents_literal(centroids)}, cv -> "
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v))"
-    )
     probe_expr = (
-        f"slice(array_sort(transform({dists}, (d, i) -> named_struct('d', d, 'c', i))), "
-        f"1, {int(n_probe)})"
+        f"slice(array_sort(transform({l2sq_dists(centroids)}, "
+        f"(d, i) -> named_struct('d', d, 'c', i))), 1, {int(n_probe)})"
     )
     exploded = q.select(
         "*", F.explode(F.array(F.expr(probe_expr))).alias("_pc")
@@ -144,70 +147,35 @@ def _with_probe_cells(
     )
 
 
-def ann_ivf_multiprobe_topk(
+def _probe_pairs(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    iters: int = 2,
-    n_probe: int = 2,
+    n_cells: int,
+    iters: int,
+    n_probe: int,
+    safe: bool = False,
 ) -> DataFrame:
-    """IVF top-k probing the query's ``n_probe`` nearest trained cells —
-    the recall knob of a production IVF deployment: a single-probe search
-    misses neighbors that landed just across a cell boundary; probing p
-    cells multiplies the scanned fraction by ~p/n_cells while recovering
-    most boundary losses (tests assert recall(multiprobe) >=
-    recall(single-probe) vs brute force).
-
-    Physical shape is unchanged from the single-probe path: corpus rows
-    keep their ONE stored cell (the partition key at 100 TB), only the
-    tiny query side fans out x n_probe before the broadcast — so the scan
-    prunes to exactly the probed cells' files and the corpus never
-    shuffles."""
+    """Train the codebook, keep each corpus row in its ONE nearest cell,
+    fan each query out to its ``n_probe`` nearest cells, and score the
+    pairs that share a cell (similarity.cell_pairs)."""
     cents = train_ivf_centroids(embeddings, n_cells=n_cells, iters=iters)
-    corpus = with_norm(
-        assign_cells(
-            embeddings.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-            ),
-            cents,
-            vec_col="c_emb",
+    corpus = assign_cells(
+        embeddings.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
         ),
-        "c_emb",
-        "_cn",
+        cents,
+        vec_col="c_emb",
     )
-    probes = with_norm(
-        _with_probe_cells(
-            queries.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                quantized("embedding").alias("qv"),
-            ),
-            cents,
-            n_probe,
-        ).drop("qv"),
-        "q_emb",
-        "_qn",
-    )
-    # norm precompute + pre-exchange projection (r7): see
-    # similarity.with_norm — scores bit-identical, embeddings no longer
-    # shipped through the two ranking exchanges.
-    pairs = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("c_emb"), F.col("_qn"), F.col("_cn")
-            ).alias("cos_sim_raw"),
-        )
-    )
-    # two-stage top-k (similarity._ranked): a single per-query window
-    # would land a full probed cell (~n_probe x N/n_cells rows) on one
-    # task at 100 TB — round-3 verdict item 1.
-    return _ranked(pairs, k, extra_cols=("cell",))
+    probes = _with_probe_cells(
+        queries.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            quantized("embedding").alias("qv"),
+        ),
+        cents,
+        n_probe,
+    ).drop("qv")
+    return cell_pairs(corpus, probes, safe=safe)
 
 
 def ann_ivf_trained_topk(
@@ -216,47 +184,27 @@ def ann_ivf_trained_topk(
     k: int = 10,
     n_cells: int = 8,
     iters: int = 2,
+    n_probe: int = 1,
 ) -> DataFrame:
     """IVF top-k with a TRAINED coarse quantizer: train k-means on the
-    corpus, assign corpus and queries to cells, probe only the query's own
-    cell, rank by exact double cosine (desc, neighbor_id asc)."""
-    cents = train_ivf_centroids(embeddings, n_cells=n_cells, iters=iters)
-    corpus = with_norm(
-        assign_cells(
-            embeddings.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-            ),
-            cents,
-            vec_col="c_emb",
-        ),
-        "c_emb",
-        "_cn",
-    )
-    probes = with_norm(
-        assign_cells(
-            queries.select(
-                F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-            ),
-            cents,
-            vec_col="q_emb",
-        ),
-        "q_emb",
-        "_qn",
-    )
-    # norm precompute + pre-exchange projection (r7, similarity.with_norm)
-    pairs = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("c_emb"), F.col("_qn"), F.col("_cn")
-            ).alias("cos_sim_raw"),
-        )
-    )
-    # two-stage top-k: see similarity._ranked (round-3 verdict item 1)
+    corpus, assign corpus rows to cells, probe the query's ``n_probe``
+    nearest cells, rank by exact double cosine (desc, neighbor_id asc).
+
+    ``n_probe`` is the recall knob of a production IVF deployment: a
+    single-probe search misses neighbors that landed just across a cell
+    boundary; probing p cells multiplies the scanned fraction by
+    ~p/n_cells while recovering most boundary losses (tests assert
+    recall(n_probe=2) >= recall(n_probe=1) vs brute force).
+
+    Physical shape: corpus rows keep their ONE stored cell (the
+    partition key at 100 TB), only the tiny query side fans out
+    x n_probe before the broadcast — so the scan prunes to exactly the
+    probed cells' files and the corpus never shuffles.  A neighbor lives
+    in exactly one cell, so the probe union needs no distinct.  Top-k is
+    the two-stage salted ranking (similarity._ranked): a single
+    per-query window would land a full probed cell on one task at
+    100 TB — round-3 verdict item 1."""
+    pairs = _probe_pairs(embeddings, queries, n_cells, iters, n_probe)
     return _ranked(pairs, k, extra_cols=("cell",))
 
 
@@ -275,60 +223,19 @@ def ann_ivf_range_search(
     matches; truncating at k silently drops duplicates), while top-k
     remains the recommendation-style mode.
 
-    Same physical shape as ann_ivf_multiprobe_topk: corpus rows keep
-    their ONE stored cell, the tiny query side fans out x n_probe before
-    the broadcast, the scan prunes to probed cells — but the ranking
-    stage disappears entirely: a threshold filter needs NO window at
-    all, so the plan is join -> filter -> done (strictly cheaper than
-    top-k at scale).  cosine_safe: zero-magnitude vectors yield NULL and
-    fail the threshold instead of aborting under ANSI."""
-    cents = train_ivf_centroids(embeddings, n_cells=n_cells, iters=iters)
-    corpus = with_norm(
-        assign_cells(
-            embeddings.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-            ),
-            cents,
-            vec_col="c_emb",
-        ),
-        "c_emb",
-        "_cn",
-    )
-    probes = with_norm(
-        _with_probe_cells(
-            queries.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                quantized("embedding").alias("qv"),
-            ),
-            cents,
-            n_probe,
-        ).drop("qv"),
-        "q_emb",
-        "_qn",
-    )
-    # cosine_safe with precomputed norms (value-identical: same guard,
-    # same quotient — see similarity.with_norm), evaluated ONCE behind a
-    # generator barrier: a filter on a projected expression is otherwise
-    # pushed below the Project by substitution, evaluating the cosine
-    # twice per row (the §4.4-style duplication, for plain expressions).
-    safe_cos = F.when(
-        (F.col("_qn") > 0) & (F.col("_cn") > 0),
-        cosine_from_norms(
-            F.col("q_emb"), F.col("c_emb"), F.col("_qn"), F.col("_cn")
-        ),
-    )
-    return (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            F.explode(F.array(F.round(safe_cos, 6))).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull() & (F.col("cos_sim") >= min_sim))
-        # a (query, neighbor) pair reachable through BOTH probed cells
-        # would duplicate — impossible here (corpus rows hold ONE cell),
-        # so no distinct is needed; plan stays join -> filter
-    )
+    Same physical shape as ann_ivf_trained_topk — but the ranking stage
+    disappears entirely: a threshold filter needs NO window at all, so
+    the plan is join -> filter -> done (strictly cheaper than top-k at
+    scale).  cosine_safe: zero-magnitude vectors yield NULL and fail the
+    threshold instead of aborting under ANSI."""
+    pairs = _probe_pairs(embeddings, queries, n_cells, iters, n_probe, safe=True)
+    # the rounded score is evaluated ONCE behind a generator barrier: a
+    # filter on a projected expression is otherwise pushed below the
+    # Project by substitution, evaluating the cosine twice per row (the
+    # §4.4-style duplication, for plain expressions).
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        "cell",
+        F.explode(F.array(F.round("cos_sim_raw", 6))).alias("cos_sim"),
+    ).filter(F.col("cos_sim").isNotNull() & (F.col("cos_sim") >= min_sim))

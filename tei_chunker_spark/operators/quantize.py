@@ -10,8 +10,22 @@ LLM-data-pipeline family the task sheet requires (SURVEY.md §2.2 /
 """
 from __future__ import annotations
 
+import functools
+import operator
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .kmeans import (
+    _with_probe_cells,
+    argmin,
+    assign_cells,
+    l2sq_dists,
+    quantized,
+    train_ivf_centroids,
+)
+from .ranking import two_stage_topk
 
 
 def embed_quantize(embeddings: DataFrame, levels: int = 255) -> DataFrame:
@@ -92,15 +106,9 @@ def _pq_dists(books, w: int):
     """struct(d0..d{m-1}) of per-subspace integer L2^2 distance arrays
     (one entry per codebook cell), over a bound ``qv`` column.  Shared by
     the joint trainer and the encoder so assignment math cannot drift."""
-    from .kmeans import _cents_literal
-
     return F.struct(
         *[
-            F.expr(
-                f"transform({_cents_literal(books[j])}, cv -> "
-                f"aggregate(zip_with(slice(qv, {j * w + 1}, {w}), cv, "
-                "(x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v))"
-            ).alias(f"d{j}")
+            F.expr(l2sq_dists(books[j], f"slice(qv, {j * w + 1}, {w})")).alias(f"d{j}")
             for j in range(len(books))
         ]
     )
@@ -126,8 +134,6 @@ def pq_train(
     identical results — the per-subspace argmins never interact.)  The
     per-iteration driver round-trip is n_cells x dim integers,
     independent of corpus size."""
-    from .kmeans import quantized
-
     m = int(m)
     q = embeddings.select(
         F.col("vec_id").alias("_id"), quantized("embedding").alias("qv")
@@ -144,12 +150,7 @@ def pq_train(
         with_d = q.select(
             "qv", F.explode(F.array(_pq_dists(books, w))).alias("_d")
         )
-        cells = F.array(
-            *[
-                F.expr(f"array_position(_d.d{j}, array_min(_d.d{j}))") - 1
-                for j in range(m)
-            ]
-        )
+        cells = F.array(*[argmin(f"_d.d{j}") for j in range(m)])
         sums = (
             with_d.select(cells.alias("_cells"), F.posexplode("qv").alias("i", "v"))
             .select(
@@ -180,8 +181,6 @@ def _pq_with_dists(embeddings: DataFrame, books, w: int) -> DataFrame:
     materialized behind generator barriers (so argmin + min don't each
     recompute n_cells integer-L2 folds per subspace — the interpreted-HOF
     re-inlining trap dedup.py documents)."""
-    from .kmeans import quantized
-
     m = len(books)
     q = embeddings.select("vec_id", quantized("embedding").alias("qv"))
     q = q.select("vec_id", F.explode(F.array("qv")).alias("qv"))
@@ -224,19 +223,11 @@ def pq_encode(
     re-inlining trap dedup.py documents), and no shuffle or join touches
     the data at all."""
     books, w = pq_train(embeddings, m=m, n_cells=n_cells, iters=iters)
-    m = int(m)
-    q = _pq_with_dists(embeddings, books, w)
-    codes = F.array(
-        *[
-            (F.expr(f"array_position(_d{j}, array_min(_d{j}))") - 1).cast("int")
-            for j in range(int(m))
-        ]
+    codes = F.array(*[argmin(f"_d{j}") for j in range(len(books))])
+    qdist = functools.reduce(
+        operator.add, [F.expr(f"array_min(_d{j})") for j in range(len(books))]
     )
-    qdist = None
-    for j in range(int(m)):
-        t = F.expr(f"array_min(_d{j})")
-        qdist = t if qdist is None else qdist + t
-    return q.select(
+    return _pq_with_dists(embeddings, books, w).select(
         "vec_id", codes.alias("codes"), qdist.cast("long").alias("qdist")
     )
 
@@ -251,10 +242,6 @@ def _train_both(embeddings: DataFrame, n_cells: int, m: int, pq_cells: int,
     the driver folds centroid sums, so interleaving the two job streams
     back-fills that idle time.  Results are identical to the sequential
     composition (both trainings are pure functions of the input)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from .kmeans import train_ivf_centroids
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         coarse_f = pool.submit(
             train_ivf_centroids, embeddings, n_cells=n_cells, iters=iters
@@ -263,6 +250,71 @@ def _train_both(embeddings: DataFrame, n_cells: int, m: int, pq_cells: int,
             pq_train, embeddings, m=m, n_cells=pq_cells, iters=iters
         )
         return coarse_f.result(), books_f.result()
+
+
+def _adc_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    books,
+    w: int,
+    k: int,
+    coarse=None,
+    n_probe: int = 1,
+) -> DataFrame:
+    """ADC top-``k`` over PQ ``books``: corpus rows as their m codes,
+    queries as m per-subspace LUTs (the same distance arrays, computed on
+    the query rows — ADC's "asymmetric": the query stays
+    unquantized-by-PQ, only the candidate is represented by its codes),
+    pair distance ``sum_j LUT_j[code_j]``, ranked (adc_dist asc,
+    neighbor_id asc) through the shared two-stage salted ranking,
+    self-pairs excluded.  With a ``coarse`` IVF codebook each corpus row
+    keeps its ONE nearest coarse cell and each query probes its
+    ``n_probe`` nearest (kmeans._with_probe_cells); only pairs sharing a
+    cell are scored and the output carries ``cell``."""
+    m = len(books)
+    codes = _pq_with_dists(embeddings, books, w).select(
+        F.col("vec_id").alias("neighbor_id"),
+        *[argmin(f"_d{j}").alias(f"_c{j}") for j in range(m)],
+    )
+    luts = _pq_with_dists(queries, books, w).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(f"_d{j}").alias(f"_lut{j}") for j in range(m)],
+    )
+    if coarse is None:
+        pairs = codes.join(
+            F.broadcast(luts), F.col("query_id") != F.col("neighbor_id")
+        )
+        extra = ()
+    else:
+        corpus = codes.join(
+            assign_cells(embeddings.select("vec_id", "embedding"), coarse).select(
+                F.col("vec_id").alias("neighbor_id"), "cell"
+            ),
+            "neighbor_id",
+        )
+        probes = _with_probe_cells(
+            queries.select(
+                F.col("vec_id").alias("query_id"), quantized("embedding").alias("qv")
+            ),
+            coarse,
+            n_probe,
+        ).select("query_id", "cell")
+        pairs = corpus.join(
+            F.broadcast(probes.join(luts, "query_id")), "cell"
+        ).filter(F.col("query_id") != F.col("neighbor_id"))
+        extra = ("cell",)
+    adc = functools.reduce(
+        operator.add, [F.expr(f"_lut{j}[_c{j}]") for j in range(m)]
+    )
+    ranked = two_stage_topk(
+        pairs.withColumn("adc_dist", adc.cast("long")),
+        part_cols=["query_id"],
+        order_cols=[F.col("adc_dist").asc(), F.col("neighbor_id").asc()],
+        salt_col="neighbor_id",
+        k=k,
+        rank_alias="rank",
+    )
+    return ranked.select("query_id", "neighbor_id", *extra, "rank", "adc_dist")
 
 
 def pq_adc_topk(
@@ -290,42 +342,8 @@ def pq_adc_topk(
     brute force on top of the ~100x smaller scan).  Top-k goes through
     the shared two-stage salted ranking (operators/ranking.py), so no
     task ever holds a query's full candidate list."""
-    from .ranking import two_stage_topk
-
     books, w = pq_train(embeddings, m=m, n_cells=n_cells, iters=iters)
-    m = int(m)
-    codes = _pq_with_dists(embeddings, books, w).select(
-        F.col("vec_id").alias("neighbor_id"),
-        *[
-            (F.expr(f"array_position(_d{j}, array_min(_d{j}))") - 1)
-            .cast("int")
-            .alias(f"_c{j}")
-            for j in range(m)
-        ],
-    )
-    # per-query LUTs: the same distance arrays, just computed on the
-    # query rows (ADC's "asymmetric": the query stays unquantized-by-PQ,
-    # only the candidate is represented by its codes)
-    luts = _pq_with_dists(queries, books, w).select(
-        F.col("vec_id").alias("query_id"),
-        *[F.col(f"_d{j}").alias(f"_lut{j}") for j in range(m)],
-    )
-    adc = None
-    for j in range(m):
-        t = F.expr(f"_lut{j}[_c{j}]")
-        adc = t if adc is None else adc + t
-    pairs = codes.join(
-        F.broadcast(luts), F.col("query_id") != F.col("neighbor_id")
-    ).withColumn("adc_dist", adc.cast("long"))
-    ranked = two_stage_topk(
-        pairs,
-        part_cols=["query_id"],
-        order_cols=[F.col("adc_dist").asc(), F.col("neighbor_id").asc()],
-        salt_col="neighbor_id",
-        k=k,
-        rank_alias="rank",
-    )
-    return ranked.select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _adc_topk(embeddings, queries, books, w, k)
 
 
 def ivf_pq_topk(
@@ -336,144 +354,33 @@ def ivf_pq_topk(
     m: int = 4,
     pq_cells: int = 8,
     iters: int = 2,
+    n_probe: int = 1,
 ) -> DataFrame:
     """The production IVF-PQ topology end-to-end: coarse-quantize the
     corpus into ``n_cells`` inverted lists (kmeans.py's trained integer
     codebook), PQ-encode every vector, then answer each query by probing
-    ITS OWN coarse cell and ranking the cell's members by ADC — the
-    exact composition FAISS/SCaNN-style services deploy (probe prunes
-    the corpus, codes shrink the scan, LUTs replace the fold).
+    its ``n_probe`` nearest coarse cells and ranking those cells'
+    members by ADC — the exact composition FAISS/SCaNN-style services
+    deploy (probe prunes the corpus, codes shrink the scan, LUTs replace
+    the fold).
 
     Everything stays in the deterministic integer domain, so the DuckDB
     oracle (coarse chain + per-subspace PQ chains + the same LUT
     distance, composed) matches bit-for-bit.  Ranking (adc_dist asc,
-    neighbor_id asc) within the probed cell; self excluded.
+    neighbor_id asc) within the probed cells; self excluded.
 
     Shape at 100 TB: at write time the corpus is partitioned by coarse
-    cell, so a probe reads ONE cell's code files (partition pruning does
-    the 1/n_cells fan-out cut) and scans m-int codes, not vectors;
-    queries + LUTs broadcast; top-k via the shared two-stage salted
-    rank.  Recall knobs (more probes, bigger m) trade scan volume for
-    quality — the multi-probe variant of the coarse step is
-    similarity.ann_ivf_multiprobe's device, composable here."""
-    from .kmeans import assign_cells, train_ivf_centroids
-    from .ranking import two_stage_topk
-
+    cell, so a probe reads only the probed cells' code files (partition
+    pruning does the n_probe/n_cells fan-out cut) and scans m-int codes,
+    not vectors; only the tiny query+LUT side fans out x n_probe before
+    the broadcast; top-k via the shared two-stage salted rank.  A
+    neighbor lives in exactly one cell, so the probe union is dedup-free
+    by construction.  ``n_probe`` is the recall knob: single-probe
+    misses neighbors just across a cell boundary; probing p cells scans
+    ~p/n_cells of the codes while recovering most boundary losses."""
     coarse, (books, w) = _train_both(
         embeddings, n_cells=n_cells, m=m, pq_cells=pq_cells, iters=iters
     )
-    m = int(m)
-    corpus_cells = assign_cells(
-        embeddings.select("vec_id", "embedding"), coarse
-    ).select(F.col("vec_id").alias("neighbor_id"), "cell")
-    codes = _pq_with_dists(embeddings, books, w).select(
-        F.col("vec_id").alias("neighbor_id"),
-        *[
-            (F.expr(f"array_position(_d{j}, array_min(_d{j}))") - 1)
-            .cast("int")
-            .alias(f"_c{j}")
-            for j in range(m)
-        ],
+    return _adc_topk(
+        embeddings, queries, books, w, k, coarse=coarse, n_probe=n_probe
     )
-    corpus = codes.join(corpus_cells, "neighbor_id")
-    qcells = assign_cells(
-        queries.select("vec_id", "embedding"), coarse
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    luts = _pq_with_dists(queries, books, w).select(
-        F.col("vec_id").alias("query_id"),
-        *[F.col(f"_d{j}").alias(f"_lut{j}") for j in range(m)],
-    )
-    qside = qcells.join(luts, "query_id")
-    adc = None
-    for j in range(m):
-        t = F.expr(f"_lut{j}[_c{j}]")
-        adc = t if adc is None else adc + t
-    pairs = (
-        corpus.join(F.broadcast(qside), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc_dist", adc.cast("long"))
-    )
-    ranked = two_stage_topk(
-        pairs,
-        part_cols=["query_id"],
-        order_cols=[F.col("adc_dist").asc(), F.col("neighbor_id").asc()],
-        salt_col="neighbor_id",
-        k=k,
-        rank_alias="rank",
-    )
-    return ranked.select("query_id", "neighbor_id", "cell", "rank", "adc_dist")
-
-
-def ivf_pq_multiprobe_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    m: int = 4,
-    pq_cells: int = 8,
-    iters: int = 2,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF-PQ with the production recall knob: each query probes its
-    ``n_probe`` nearest coarse cells (kmeans._with_probe_cells — exact
-    integer distances, ties to the smaller cell) and ADC-ranks the union
-    of those cells' members.  Single-probe misses neighbors just across
-    a cell boundary; probing p cells scans ~p/n_cells of the codes while
-    recovering most boundary losses — same trade as
-    ann_ivf_multiprobe_topk, now over codes instead of vectors.
-
-    Physical shape: corpus rows keep their ONE stored cell (the
-    partition key at 100 TB); only the tiny query+LUT side fans out
-    x n_probe before the broadcast.  A neighbor lives in exactly one
-    cell, so the probe union is dedup-free by construction."""
-    from .kmeans import _with_probe_cells, assign_cells, quantized, train_ivf_centroids
-    from .ranking import two_stage_topk
-
-    coarse, (books, w) = _train_both(
-        embeddings, n_cells=n_cells, m=m, pq_cells=pq_cells, iters=iters
-    )
-    m = int(m)
-    corpus = _pq_with_dists(embeddings, books, w).select(
-        F.col("vec_id").alias("neighbor_id"),
-        *[
-            (F.expr(f"array_position(_d{j}, array_min(_d{j}))") - 1)
-            .cast("int")
-            .alias(f"_c{j}")
-            for j in range(m)
-        ],
-    ).join(
-        assign_cells(
-            embeddings.select("vec_id", "embedding"), coarse
-        ).select(F.col("vec_id").alias("neighbor_id"), "cell"),
-        "neighbor_id",
-    )
-    probes = _with_probe_cells(
-        queries.select(
-            F.col("vec_id").alias("query_id"), quantized("embedding").alias("qv")
-        ),
-        coarse,
-        n_probe,
-    ).select("query_id", "cell")
-    luts = _pq_with_dists(queries, books, w).select(
-        F.col("vec_id").alias("query_id"),
-        *[F.col(f"_d{j}").alias(f"_lut{j}") for j in range(m)],
-    )
-    qside = probes.join(luts, "query_id")
-    adc = None
-    for j in range(m):
-        t = F.expr(f"_lut{j}[_c{j}]")
-        adc = t if adc is None else adc + t
-    pairs = (
-        corpus.join(F.broadcast(qside), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc_dist", adc.cast("long"))
-    )
-    ranked = two_stage_topk(
-        pairs,
-        part_cols=["query_id"],
-        order_cols=[F.col("adc_dist").asc(), F.col("neighbor_id").asc()],
-        salt_col="neighbor_id",
-        k=k,
-        rank_alias="rank",
-    )
-    return ranked.select("query_id", "neighbor_id", "cell", "rank", "adc_dist")

@@ -673,8 +673,7 @@ def events_session_native(events: DataFrame, gap: str = "30 minutes") -> DataFra
     strictly-greater-than, identical to the lag/cumsum idiom's — and
     window.end is last_ts + gap, not max(ts).  One shuffle on user_id,
     same as the manual idiom; in STREAMING mode this same expression gets
-    incremental state merging for free (see streaming/stream.py for the
-    family)."""
+    incremental state merging for free."""
     w = F.session_window(F.col("ts"), gap)
     return (
         events.groupBy("user_id", w.alias("sw"))
@@ -1097,9 +1096,8 @@ def events_hopping_census(
     """Batch HOPPING-window census: per (window_start, event_type), the
     event count and exact decimal value sum, with windows of
     ``width_seconds`` sliding every ``slide_seconds`` — each event lands
-    in width/slide overlapping windows.  The batch twin of the streaming
-    tumbling/window aggregations (streaming/stream.py), filling the
-    overlapping-window slot in the aggregation inventory.
+    in width/slide overlapping windows, filling the overlapping-window
+    slot in the aggregation inventory.
 
     Implemented by the arithmetic fan-out Spark's own ``window()`` uses
     internally — explode the (width div slide) window starts each event

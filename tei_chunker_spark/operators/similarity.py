@@ -104,36 +104,39 @@ def ann_bruteforce_topk(
     return _ranked(pairs, k)
 
 
+def cell_pairs(corpus: DataFrame, probes: DataFrame, safe: bool = False) -> DataFrame:
+    """Score every (probe, corpus row) pair that shares a ``cell`` — the
+    IVF probe join.  ``corpus`` carries (neighbor_id, c_emb, cell),
+    ``probes`` (query_id, q_emb, cell); norms are precomputed per row
+    (:func:`with_norm`), the probes broadcast, self-pairs are dropped.
+    Output ``(query_id, neighbor_id, cell, cos_sim_raw)``, the scores
+    value-identical to ``cosine``; ``safe`` makes a zero-magnitude side
+    score NULL (cosine_safe) instead of dividing by zero."""
+    c = with_norm(corpus, "c_emb", "_cn")
+    q = with_norm(probes, "q_emb", "_qn")
+    score = cosine_from_norms(
+        F.col("q_emb"), F.col("c_emb"), F.col("_qn"), F.col("_cn")
+    )
+    if safe:
+        score = F.when((F.col("_qn") > 0) & (F.col("_cn") > 0), score)
+    return (
+        c.join(F.broadcast(q), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", "cell", score.alias("cos_sim_raw"))
+    )
+
+
 def ann_ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """IVF-style top-k: probe only the query's own coarse cell (label).
     Same r7 norm-precompute + pre-exchange projection as the brute path."""
-    q = with_norm(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("label").alias("cell"),
-        ),
-        "q_emb",
-        "_qn",
+    probes = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("label").alias("cell"),
     )
-    c = with_norm(
-        embeddings.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("label").alias("cell"),
-        ),
-        "c_emb",
-        "_cn",
+    corpus = embeddings.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("label").alias("cell"),
     )
-    pairs = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_norms(
-                F.col("q_emb"), F.col("c_emb"), F.col("_qn"), F.col("_cn")
-            ).alias("cos_sim_raw"),
-        )
-    )
-    return _ranked(pairs, k)
+    return _ranked(cell_pairs(corpus, probes), k)

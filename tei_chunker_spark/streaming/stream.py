@@ -2,25 +2,16 @@
 
 The north rule is a batch `spark-submit` job with manifest-based resume
 (SURVEY.md §3.4) — streaming is an *alternative* integration, not the
-primary path.  Two real uses:
-
-* :func:`extract_stream` — the same one-shuffle extraction pipeline under
-  ``Trigger.AvailableNow``: the file-source checkpoint gives exactly-once,
-  per-micro-batch resumability for free (kill it mid-corpus, restart,
-  no dupes/no gaps — the streaming analogue of the manifest).  On a real
-  deployment the source is an Iceberg streaming read.
-* :func:`events_hourly_stream` — watermarked tumbling-window aggregation
-  (late data handled by the watermark) demonstrating the stateful-ops
-  surface over the events table.
-* :func:`user_totals_stream` — CUSTOM stateful operator via
-  ``applyInPandasWithState``: per-user running totals carried in explicit
-  group state across micro-batches (the escape hatch when built-in
-  windowed aggregation can't express the state machine).
+primary path.  :func:`extract_stream` runs the same one-shuffle
+extraction pipeline under ``Trigger.AvailableNow``: the file-source
+checkpoint gives exactly-once, per-micro-batch resumability for free
+(kill it mid-corpus, restart, no dupes/no gaps — the streaming analogue
+of the manifest).  On a real deployment the source is an Iceberg
+streaming read.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import JobConfig
@@ -49,493 +40,6 @@ def extract_stream(
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def user_totals_stream(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_path: str,
-    output_path: str,
-) -> StreamingQuery:
-    """Custom stateful streaming aggregation: per-user running event count
-    and value sum via ``applyInPandasWithState``.
-
-    Each micro-batch updates the user's explicit state (n_events,
-    sum_value — survives across batches in the state store) and emits the
-    user's updated totals, so the LAST row per user in the output equals
-    the batch groupBy totals once the stream drains.  This is the
-    sanctioned pattern for stateful logic that windowed aggregation can't
-    express (custom counters, session machines, decaying stats): state is
-    an Arrow-typed tuple, the per-group update runs in pandas, and the
-    state store gives exactly-once across restarts via the checkpoint."""
-    src = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_path)
-    )
-
-    def update(key, pdfs, state) -> "object":
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [round(total, 6)]}
-        )
-
-    totals = src.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, sum_value double",
-        stateStructType="n long, total double",
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-    return (
-        totals.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def events_hourly_stream(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    watermark: str = "2 hours",
-) -> StreamingQuery:
-    """Watermarked tumbling 1-hour aggregation over a stream of events.
-
-    ``events_path`` must be a DIRECTORY (FileStreamSource requirement —
-    pointing it at a single parquet file fails with "Option 'basePath'
-    must be a directory").
-
-    Withheld-tail caveat (inherent to append mode + watermark): windows
-    within ``watermark`` of the max observed event time are retained in
-    state, NOT emitted — under a one-shot ``Trigger.AvailableNow``
-    invocation the trailing ~2 hours of windows are therefore absent from
-    the output (they emit on the NEXT run once later data advances the
-    watermark).  That is the correct exactly-once semantics for a resumed
-    stream; for a one-shot batch-over-stream summary use the batch
-    ``relational.events_hourly`` instead, or run with ``outputMode
-    ("complete")`` and no watermark."""
-    src = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_path)
-    )
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("hour"), "event_type", "n_events", "sum_value"
-        )
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _make_running_totals():
-    """Construct the RunningTotals StatefulProcessor class (module-level
-    factory so the unit test reaches the same class the stream runs; the
-    base-class import is deferred only to keep module import light)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, total = (
-                self._state.get() if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(total, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotals
-
-
-def user_totals_tws_stream(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_path: str,
-    output_path: str,
-) -> StreamingQuery:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-state API that supersedes applyInPandasWithState
-    (kept one function up for surface completeness): named, typed state
-    primitives (ValueState here; List/MapState exist) managed by the
-    state store with per-state TTL, instead of one opaque
-    per-key tuple.  Output is the updated running total per user per
-    micro-batch — same contract as user_totals_stream, letting the test
-    pin the two APIs against each other and the batch aggregate.
-
-    Sandbox caveat: the TWS control protocol needs ``google.protobuf``
-    (pyspark ships only the generated StateMessage_pb2); the module is
-    absent here, so tests/test_streaming.py gates the RUNTIME path with
-    importorskip — the documented environmental blocker, exactly like
-    the Iceberg runtime jar.  The processor BODY, however, is plain
-    Python against the StatefulProcessorHandle protocol, so
-    tests/test_streaming.py::test_tws_processor_logic executes
-    init/handleInputRows/close against a fake handle — the logic runs in
-    CI even where the wire protocol cannot (round-3 verdict item 8)."""
-    src = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_path)
-    )
-    totals = src.groupBy("user_id").transformWithStateInPandas(
-        _make_running_totals()(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Append",
-        timeMode="None",
-    )
-    return (
-        totals.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def click_purchase_join_stream(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    within: str = "1 hour",
-) -> StreamingQuery:
-    """STREAM-STREAM inner join: purchases matched to the same user's
-    clicks at most ``within`` before — the attribution join, and the one
-    streaming shape that NEEDS symmetric state: both sides buffer rows
-    until the watermark proves no more matches can arrive.
-
-    The two state-size controls, both mandatory at 100 TB/day: a
-    watermark on EACH side (bounds how long a row can wait for its
-    match), and a TIME-RANGE predicate in the join condition (lets the
-    engine evict a click as soon as the purchase-side watermark passes
-    click_ts + within, rather than keeping it forever).  An equality-only
-    stream-stream join would grow state without bound and is the classic
-    production incident."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    clicks = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-            "user_id",
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
-    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def enriched_stream(
-    spark: SparkSession,
-    events_path: str,
-    user_dim: "DataFrame",
-    checkpoint_path: str,
-    output_path: str,
-) -> StreamingQuery:
-    """Stream-static join: each streaming event enriched with a static
-    dimension row (user cohort) — the standard streaming enrichment
-    pattern.  The static side is re-resolved per micro-batch (so a table
-    swap is picked up at batch boundaries) and BROADCAST: the stream side
-    never shuffles, which is what keeps a 100 TB/day feed linear — a
-    shuffled stream-static join would re-partition every micro-batch.
-
-    No watermark needed: stream-static inner joins are stateless (state
-    only appears in stream-stream joins)."""
-    from pyspark.sql import functions as F
-
-    src = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_path)
-    )
-    joined = src.join(F.broadcast(user_dim), "user_id").select(
-        "event_id", "ts", "user_id", "event_type", "value", "cohort"
-    )
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def hourly_batch_writer(output_path: str):
-    """The ``foreachBatch`` body of ``hourly_foreach_batch_stream``,
-    factored out so tests can exercise the replay contract directly:
-    writes this batch's PARTIAL hourly counts into partitions keyed
-    (hour_key, batch_id)."""
-    from pyspark.sql import functions as F
-
-    def write_batch(batch_df: "DataFrame", batch_id: int) -> None:
-        agg = (
-            batch_df.groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
-            )
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .withColumn("hour_key", F.date_format("hour", "yyyyMMddHH"))
-        )
-        (
-            agg.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("hour_key", "batch_id")
-            .parquet(output_path)
-        )
-
-    return write_batch
-
-
-def hourly_counts(spark: SparkSession, output_path: str) -> "DataFrame":
-    """Reader side of the hourly sink: merge the per-batch partials into
-    the final (hour, event_type) counts.  One hash aggregate over a table
-    whose size is O(hours x types x batches) — partition pruning on
-    hour_key serves point lookups."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(output_path)
-        .groupBy("hour", "event_type")
-        .agg(F.sum("n_events").cast("long").alias("n_events"))
-    )
-
-
-def hourly_foreach_batch_stream(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_path: str,
-    output_path: str,
-) -> StreamingQuery:
-    """``foreachBatch`` sink: per micro-batch, write the batch's PARTIAL
-    hourly counts into a partition keyed (hour_key, batch_id) — the
-    pattern for sinks with no native streaming writer (JDBC, Iceberg
-    MERGE, key-value stores).  Read the final counts back with
-    ``hourly_counts`` (sums partials per hour).
-
-    Exactly-once story: foreachBatch gives at-least-once delivery of
-    each batch_id, with batch composition pinned by the checkpoint;
-    idempotence must come from the write.  Dynamic partition overwrite
-    on (hour_key, batch_id) means a REPLAYED batch rewrites exactly its
-    own partitions with the same rows, while other batches' partials for
-    the same hour are untouched.  Round 3 partitioned on hour_key alone
-    and overwrote it with the CURRENT batch's counts — correct only
-    while every hour was fully contained in one batch; an hour spanning
-    micro-batches (maxFilesPerTrigger, continuous run, restart after new
-    files for an old hour) silently lost the earlier batches' counts
-    (round-3 advisory, medium).  The reader-side merge is the standard
-    partial-aggregate contract; a fresh RUN (new checkpoint) is not a
-    replay and must target a clean output directory."""
-    src = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_path)
-    )
-
-    return (
-        src.writeStream.foreachBatch(hourly_batch_writer(output_path))
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def dedup_stream(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    watermark: str = "2 hours",
-) -> StreamingQuery:
-    """Streaming exact-dedup on ingest: keep the first arrival of each
-    event_id, dropping re-deliveries that land within ``watermark`` of
-    event time — the standard at-least-once -> effectively-once repair
-    for a feed that redelivers (Kafka rebalances, upstream retries).
-
-    ``dropDuplicatesWithinWatermark`` keys the state store on event_id
-    and EXPIRES entries once the watermark passes them, so state is
-    bounded by (arrival rate x watermark) instead of growing with the
-    whole stream — the property that makes this runnable forever at
-    100 TB/day, and the reason plain ``dropDuplicates`` (unbounded state)
-    is the wrong tool on a stream.  Duplicates farther apart than the
-    watermark are out of contract here and belong to the batch dedup
-    family (operators/dedup.py)."""
-    src = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_path)
-    )
-    deduped = src.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def census_batch_writer(output_path: str):
-    """``foreachBatch`` body of ``census_foreach_batch_stream``: write
-    this batch's PARTIAL per-(lang, source) census — the streaming form
-    of relational.rollup_merge's delta aggregation — into a partition
-    keyed by batch_id (dynamic overwrite, so an at-least-once REPLAY of
-    a batch rewrites exactly its own partition: idempotent)."""
-    from pyspark.sql import functions as F
-
-    def write_batch(batch_df: "DataFrame", batch_id: int) -> None:
-        agg = (
-            batch_df.groupBy("lang", "source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(F.length("text")).cast("long").alias("n_chars_sum"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            agg.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
-
-    return write_batch
-
-
-def corpus_census(spark: SparkSession, output_path: str) -> "DataFrame":
-    """Reader side of the maintained census: merge the per-batch
-    partials (rollup_merge's math — sum the mergeable aggregates, then
-    derive the mean) into the live (lang, source) census.  One hash agg
-    over O(groups x batches) rows, corpus-size-independent."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(output_path)
-        .groupBy("lang", "source")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_chars_sum").cast("long").alias("n_chars_sum"),
-        )
-        .select(
-            "lang",
-            "source",
-            "n_docs",
-            "n_chars_sum",
-            F.round(F.col("n_chars_sum") / F.col("n_docs"), 6).alias(
-                "mean_chars"
-            ),
-        )
-    )
-
-
-def census_foreach_batch_stream(
-    spark: SparkSession,
-    docs_path: str,
-    checkpoint_path: str,
-    output_path: str,
-) -> StreamingQuery:
-    """Streaming incremental view maintenance: keep the per-(lang,
-    source) corpus census fresh as document files arrive — each
-    micro-batch contributes its partial aggregates (delta-sized work,
-    never a corpus rescan), ``corpus_census`` serves the merged view.
-    Same exactly-once construction as the hourly sink: at-least-once
-    foreachBatch delivery + idempotent per-batch_id partition overwrite
-    = effectively-once."""
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(census_batch_writer(output_path))
-        .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
     )

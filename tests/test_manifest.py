@@ -10,7 +10,6 @@ from tei_chunker_spark.corpus import INPUT_SCHEMA_DDL, make_rows
 from tei_chunker_spark.manifest import (
     completed_buckets,
     read_manifest,
-    resume_filter,
     run_resumable,
 )
 from tei_chunker_spark.operators.extract import extract_pipeline
@@ -85,16 +84,3 @@ def test_rerun_completed_job_is_noop(spark, corpus_path, tmp_path):
     n_manifest = read_manifest(spark, manifest).count()
     run_resumable(spark, corpus_path, out, manifest, JOB, job_id="j2")
     assert read_manifest(spark, manifest).count() == n_manifest  # nothing re-done
-
-
-def test_resume_filter_is_anti_join(spark, corpus_path):
-    df = spark.read.parquet(corpus_path)
-    kept = resume_filter(df, [0, 1], JOB.num_buckets)
-    from tei_chunker_spark.manifest import bucket_column
-
-    remaining_buckets = {
-        r.bucket for r in kept.select(bucket_column(JOB.num_buckets)).distinct().collect()
-    }
-    assert remaining_buckets.isdisjoint({0, 1})
-    assert kept.count() < df.count()
-    assert kept.columns == df.columns

@@ -139,6 +139,27 @@ def test_kmeans_training_deterministic(spark):
     assert c1 != init
 
 
+def test_cell_assignment_ties_go_to_smaller_cell(spark):
+    """A vector equidistant from cells 1 and 3 (and farther from 0 and 2)
+    lands in cell 1 on the corpus path (assign_cells) and on the query
+    probe path at n_probe=1; at n_probe=2 the probe order is 1, then 3."""
+    cents = [[50000, 50000], [10000, 0], [-50000, 0], [0, 10000]]
+    emb = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    assert [r.cell for r in kmeans.assign_cells(emb, cents).collect()] == [1]
+    q = emb.select("vec_id", kmeans.quantized("embedding").alias("qv"))
+
+    def probes(n_probe):
+        return sorted(
+            (r.probe_rank, r.cell)
+            for r in kmeans._with_probe_cells(q, cents, n_probe).collect()
+        )
+
+    assert probes(1) == [(0, 1)]
+    assert probes(2) == [(0, 1), (1, 3)]
+
+
 @needs_testdata
 def test_ivf_single_cell_equals_bruteforce(spark):
     """With n_cells=1 the probe covers the whole corpus, so trained-IVF

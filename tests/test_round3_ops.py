@@ -104,10 +104,7 @@ def test_multiprobe_recall_at_least_single_probe(spark):
     """Probing the 2 nearest trained cells must recover at least the
     single-probe neighbors (superset of scanned candidates) and close
     some of the gap to exact brute force."""
-    from tei_chunker_spark.operators.kmeans import (
-        ann_ivf_multiprobe_topk,
-        ann_ivf_trained_topk,
-    )
+    from tei_chunker_spark.operators.kmeans import ann_ivf_trained_topk
     from tei_chunker_spark.operators.similarity import ann_bruteforce_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -121,7 +118,7 @@ def test_multiprobe_recall_at_least_single_probe(spark):
 
     exact = topk(ann_bruteforce_topk(emb, qs, k=10))
     single = topk(ann_ivf_trained_topk(emb, qs, k=10, n_cells=8, iters=2))
-    multi = topk(ann_ivf_multiprobe_topk(emb, qs, k=10, n_cells=8, iters=2, n_probe=2))
+    multi = topk(ann_ivf_trained_topk(emb, qs, k=10, n_cells=8, iters=2, n_probe=2))
 
     def recall(approx):
         hits = sum(len(approx.get(q, set()) & exact[q]) for q in exact)
@@ -130,7 +127,7 @@ def test_multiprobe_recall_at_least_single_probe(spark):
 
     assert recall(multi) >= recall(single)
     # n_probe = n_cells degenerates to exact brute force over all cells
-    allp = topk(ann_ivf_multiprobe_topk(emb, qs, k=10, n_cells=8, iters=2, n_probe=8))
+    allp = topk(ann_ivf_trained_topk(emb, qs, k=10, n_cells=8, iters=2, n_probe=8))
     assert allp == exact
 
 

@@ -612,11 +612,7 @@ def test_ivf_pq_multiprobe_recall_not_worse_than_single(spark):
     probed ADC top-k must be at least as close to global ADC: for every
     query, multiprobe's rank-1 distance <= single-probe's rank-1, and
     its top-k set overlap with global ADC top-k is >= single-probe's."""
-    from tei_chunker_spark.operators.quantize import (
-        ivf_pq_multiprobe_topk,
-        ivf_pq_topk,
-        pq_adc_topk,
-    )
+    from tei_chunker_spark.operators.quantize import ivf_pq_topk, pq_adc_topk
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 3)
@@ -628,7 +624,7 @@ def test_ivf_pq_multiprobe_recall_not_worse_than_single(spark):
         return out
 
     single = topmap(ivf_pq_topk(e, q, k=5))
-    multi = topmap(ivf_pq_multiprobe_topk(e, q, k=5, n_probe=2))
+    multi = topmap(ivf_pq_topk(e, q, k=5, n_probe=2))
     glob = topmap(pq_adc_topk(e, q, k=5))
     for qid in single:
         s1 = min(d for (_, d) in single[qid].values())

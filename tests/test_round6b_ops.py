@@ -1097,15 +1097,15 @@ def test_ivf_range_threshold_semantics_vs_topk(spark):
     from pyspark.sql import functions as F
 
     from tei_chunker_spark.operators.kmeans import (
-        ann_ivf_multiprobe_topk,
         ann_ivf_range_search,
+        ann_ivf_trained_topk,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") < 3)
     rng = ann_ivf_range_search(emb, qs, min_sim=0.2, n_probe=2)
     got = {(r.query_id, r.neighbor_id): r.cos_sim for r in rng.collect()}
-    topk = ann_ivf_multiprobe_topk(emb, qs, k=10, n_probe=2).collect()
+    topk = ann_ivf_trained_topk(emb, qs, k=10, n_probe=2).collect()
     for r in topk:
         if r.cos_sim >= 0.2:
             assert (r.query_id, r.neighbor_id) in got
