@@ -56,6 +56,7 @@ from .operators.corpusops import (
     seq_pack_by_hash,
 )
 from .operators.textstats import doc_quality
+from .plans.barrier import barrier
 from .sources.session import get_spark
 
 _INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
@@ -96,13 +97,11 @@ def curate(
     The census counts come from the narrow gate tables (scalar
     aggregates); the "input" count rides the dedup aggregate instead of
     a dedicated corpus scan."""
-    k1 = (
-        documents.groupBy(F.md5("text").alias("_h"))
-        .agg(
+    k1 = barrier(
+        documents.groupBy(F.md5("text").alias("_h")).agg(
             F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).alias("_n"),
         )
-        .localCheckpoint(eager=True)
     )
     c1 = k1.agg(
         F.coalesce(F.sum("_n"), F.lit(0)).alias("n_input"),
@@ -110,31 +109,26 @@ def curate(
     ).first()
     keep1 = k1.select("doc_id")
     g1 = documents.join(keep1, "doc_id", "left_semi")
-    keep2 = (
-        doc_quality(g1)
-        .filter(F.col("quality") >= quality_min)
-        .select("doc_id")
-        .localCheckpoint(eager=True)
+    keep2 = barrier(
+        doc_quality(g1).filter(F.col("quality") >= quality_min).select("doc_id")
     )
     g2 = g1.join(keep2, "doc_id", "left_semi")
     keep_fluency = None
     if fluency_min_ppm is not None:
         # LM trained on the post-quality survivors themselves (the
         # self-scoring outlier setup); >= drops NULL-scored short docs
-        keep_fluency = (
+        keep_fluency = barrier(
             lm_bigram_score(g2)
             .filter(F.col("score_ppm") >= fluency_min_ppm)
             .select("doc_id")
-            .localCheckpoint(eager=True)
         )
         g2 = g2.join(keep_fluency, "doc_id", "left_semi")
-    keep3 = (
+    keep3 = barrier(
         contamination_stats(g2, eval_docs, n=3)
         .filter(
             F.coalesce(F.col("contamination"), F.lit(0.0)) <= contamination_max
         )
         .select("doc_id")
-        .localCheckpoint(eager=True)
     )
     g3 = g2.join(keep3, "doc_id", "left_semi")
     pack_cols = pick_packer(documents)(g3, budget=budget)

@@ -16,8 +16,10 @@ in __spark_entry__.py) — portability constraints worth knowing:
 """
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.barrier import materialized
 
 # --- tokens ---------------------------------------------------------------
 
@@ -67,11 +69,34 @@ def tokens(col: Column) -> Column:
 def token_count(col: Column) -> Column:
     """Whitespace-token count with the blank guard (split('') is [''],
     size 1 — the guard makes the blank document count 0).  NOTE:
-    operators that already materialized the token array behind a
-    generator barrier (textstats._with_tokens) inline this formula against
-    the materialized column instead of calling it — calling it there
-    would re-split the text."""
+    operators that already hold the materialized ``tok`` array
+    (``token_table``) count from that array instead of calling this —
+    calling it there would re-split the text."""
     return F.when(is_blank(col), F.lit(0)).otherwise(F.size(tokens(col)))
+
+
+def token_table(
+    documents: DataFrame, *cols: str, n_tokens: bool = False
+) -> DataFrame:
+    """(cols..., tok: array<string>[, n_tokens: long]): the whitespace
+    split of ``text`` materialized ONCE per row
+    (``plans.barrier.materialized``), so no downstream reference re-splits
+    the text.  ``cols`` may be ``"*"``.
+
+    ``n_tokens=True`` adds the blank-guarded count read off the array:
+    a blank text splits to [''], which counts 0 tokens, not 1.  This is
+    the one spelling of that guard on a materialized array; its value
+    equals ``token_count(text)``."""
+    t = documents.select(*cols, materialized(tokens(F.col("text")), "tok"))
+    if not n_tokens:
+        return t
+    return t.select(
+        "*",
+        F.when((F.size("tok") == 1) & (F.element_at("tok", 1) == ""), F.lit(0))
+        .otherwise(F.size("tok"))
+        .cast("long")
+        .alias("n_tokens"),
+    )
 
 
 # Same explicit-class reasoning as WS_CLASS: [^...\s] would silently
@@ -101,6 +126,24 @@ def word_ngrams(tok: Column, n: int) -> Column:
     return F.when(count >= 1, F.transform(idx, gram)).otherwise(
         F.array().cast("array<string>")
     )
+
+
+def gram_table(
+    documents: DataFrame,
+    n: int,
+    *cols: str,
+    distinct_grams: bool = False,
+    alias: str = "gram",
+) -> DataFrame:
+    """(cols..., ``alias``) word-n-gram postings, one row per gram of each
+    document (per distinct gram with ``distinct_grams``), built on
+    ``token_table`` so the text is split once: inlined, ``word_ngrams``
+    would re-split it for ``size`` and for each of the n ``element_at``
+    references of every gram."""
+    g = word_ngrams(F.col("tok"), n)
+    if distinct_grams:
+        g = F.array_distinct(g)
+    return token_table(documents, *cols).select(*cols, F.explode(g).alias(alias))
 
 
 def char_shingles(col: Column, k: int, step: int = 1) -> Column:
@@ -143,32 +186,6 @@ def l2norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2norm(a) * l2norm(b))
-
-
-def tokens_with_count(documents, text_col: str = "text"):
-    """(doc_id, tok: array<string>, n_tokens: long) — the whitespace
-    token array materialized ONCE behind a generator barrier (see
-    dedup._tokens_materialized for the re-inline hazard) with the
-    blank-document guard applied: blank text splits to [''], which must
-    count as 0 tokens, not 1.
-
-    This subtle guard used to be copy-pasted into four operators
-    (cdc_segment_census, lm_bigram_score, winnow_fingerprint_census,
-    phrase_match_census); a divergence in any one copy would silently
-    split engine-vs-oracle behavior for just that op — it lives here
-    once instead."""
-    return documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col(text_col)))).alias("tok")
-    ).select(
-        "doc_id",
-        "tok",
-        F.when(
-            (F.size("tok") == 1) & (F.element_at("tok", 1) == ""), F.lit(0)
-        )
-        .otherwise(F.size("tok"))
-        .cast("long")
-        .alias("n_tokens"),
-    )
 
 
 def cosine_safe(a: Column, b: Column) -> Column:

@@ -17,34 +17,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.columns import (
-    token_count,
-    tokens,
-    tokens_with_count,
-    word_ngrams,
-)
-
-
-def _gram_table(documents: DataFrame, n: int, *id_cols: str,
-                distinct_grams: bool = False) -> DataFrame:
-    """(id_cols..., gram) word-n-gram postings with the whitespace split
-    materialized ONCE behind a generator barrier.
-
-    ``word_ngrams(tokens(text), n)`` inlined in a single select is the
-    re-split pathology this repo documents everywhere else (CLAUDE.md;
-    dedup._tokens_materialized): projection collapsing substitutes the
-    ``split`` subtree into ``size`` plus the n ``element_at`` references
-    per gram, so every gram re-splits (and re-regex-trims) the document
-    n+1 times.  Measured r7 on the trigram operators: 10-30 s per query
-    at sf0.1 collapsing to ~1-2 s with the barrier — the barrier is the
-    difference between O(tokens) and O(tokens x n_grams) split work."""
-    toks = documents.select(
-        *id_cols, F.explode(F.array(tokens(F.col("text")))).alias("_tok")
-    )
-    g = word_ngrams(F.col("_tok"), n)
-    if distinct_grams:
-        g = F.array_distinct(g)
-    return toks.select(*id_cols, F.explode(g).alias("gram"))
+from ..functions.columns import gram_table, token_count, token_table, tokens
+from ..plans.barrier import barrier
 
 
 def seq_pack(
@@ -256,12 +230,9 @@ def boilerplate_stats(documents: DataFrame, seg_tokens: int = 10) -> DataFrame:
     join this needs no df cap.  Documents shorter than one segment get
     n_segs = 0 and a NULL ratio (kept, not dropped).
     """
-    # explode(array(...)) barrier: the split materializes once per row
-    # (see textstats._with_tokens).  A whitespace-only document splits to
-    # [''] (size 1) and floors to 0 segments — no separate guard needed.
-    segged = documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col("text")))).alias("tok")
-    ).select(
+    # A whitespace-only document splits to [''] (size 1) and floors to 0
+    # segments — no separate guard needed.
+    segged = token_table(documents, "doc_id").select(
         "doc_id",
         F.floor(F.size("tok") / seg_tokens).cast("int").alias("n_segs"),
         F.col("tok"),
@@ -323,7 +294,7 @@ def corpus_ngram_counts(
     per partition — no pair blowup); the final top-k is a
     TakeOrderedAndProject over the agg output, never a full sort of the
     gram vocabulary."""
-    grams = _gram_table(documents, n)
+    grams = gram_table(documents, n)
     return (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -350,7 +321,7 @@ def doc_familiarity(documents: DataFrame, n: int = 2) -> DataFrame:
     gram key (Zipf-hot grams fan in linearly); per-doc rollup is a second
     hash agg.  Documents with no n-grams (< n tokens) get NULL score,
     kept."""
-    grams = _gram_table(documents, n, "doc_id")
+    grams = gram_table(documents, n, "doc_id")
     df = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("gram_df"))
     per_doc = (
         grams.join(df, "gram")
@@ -398,9 +369,9 @@ def contamination_stats(
     gram instead (AQE handles the Zipf-head grams exactly as in
     doc_familiarity).  Documents with fewer than ``n`` tokens have no
     grams: n_grams = 0, NULL ratio, kept."""
-    tgrams = _gram_table(train, n, "doc_id")
+    tgrams = gram_table(train, n, "doc_id")
     egrams = (
-        _gram_table(eval_docs, n)
+        gram_table(eval_docs, n)
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
@@ -460,7 +431,7 @@ def doc_repetition(documents: DataFrame) -> DataFrame:
         )
     )
     bi = (
-        _gram_table(documents, 2, "doc_id")
+        gram_table(documents, 2, "doc_id")
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("doc_id")
@@ -579,39 +550,29 @@ def curation_census(
     (hash agg / scalar projections / broadcast gram join); the census
     rows are four scalar aggregates over the narrow id-tables.
     Everything is splittable; nothing collects to the driver.  Each
-    gate's survivor id-table is materialized once (lazy
-    localCheckpoint — the narrow doc_id-only table, never the text;
-    blocks land at the first action, r7) so
-    the census union does NOT re-run upstream lineage per branch
-    (round-4 judge find: uncheckpointed, the dedup aggregate executed
-    ~4×, doc_quality ~3×, the contamination join ~2× — several
-    redundant corpus scans for one report).  Same caveat as dedup.py's
-    device: localCheckpoint blocks lineage-replay recovery on executor
-    loss — on a real cluster use reliable checkpointing or a table
-    write for the id-tables."""
+    gate's survivor id-table is barriered (the narrow doc_id-only table,
+    never the text) so the census union does NOT re-run upstream lineage
+    per branch (round-4 judge find: unbarriered, the dedup aggregate
+    executed ~4×, doc_quality ~3×, the contamination join ~2× — several
+    redundant corpus scans for one report)."""
     from .textstats import doc_quality
 
-    keep1 = (
+    keep1 = barrier(
         documents.groupBy(F.md5("text").alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .localCheckpoint(eager=False)
     )
     g1 = documents.join(keep1, "doc_id", "left_semi")
-    keep2 = (
-        doc_quality(g1)
-        .filter(F.col("quality") >= quality_min)
-        .select("doc_id")
-        .localCheckpoint(eager=False)
+    keep2 = barrier(
+        doc_quality(g1).filter(F.col("quality") >= quality_min).select("doc_id")
     )
     g2 = g1.join(keep2, "doc_id", "left_semi")
-    keep3 = (
+    keep3 = barrier(
         contamination_stats(g2, eval_docs, n=n)
         .filter(
             F.coalesce(F.col("contamination"), F.lit(0.0)) <= contamination_max
         )
         .select("doc_id")
-        .localCheckpoint(eager=False)
     )
     def stage(df: DataFrame, label: str) -> DataFrame:
         return df.select(
@@ -696,21 +657,21 @@ def source_stats(documents: DataFrame) -> DataFrame:
     uses — one corpus scan total, no self-join); one hash agg on the
     low-cardinality source key with two distinct aggregates (Catalyst
     plans one expand x3 — linear, partial-aggregated, no pair blowup)."""
-    from .textstats import _with_tokens, quality_columns
+    from .textstats import quality_columns
 
     quality, _, _ = quality_columns()
-    base = _with_tokens(documents).select(
+    base = token_table(documents, "*", n_tokens=True).select(
         "source",
         "lang",
         F.md5("text").alias("_th"),
-        token_count(F.col("text")).cast("long").alias("_nt"),
+        "n_tokens",
         quality.alias("_q"),
     )
     return (
         base.groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("_nt").cast("long").alias("n_tokens"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
             F.countDistinct("_th").cast("long").alias("n_distinct_texts"),
             F.countDistinct("lang").cast("long").alias("n_langs"),
             F.count("_q").cast("long").alias("_n_scored"),
@@ -896,7 +857,7 @@ def bpe_train(documents: DataFrame, n_merges: int = 8) -> DataFrame:
     hash agg; Heaps' law makes the vocab orders of magnitude smaller
     than the token stream).  Each merge step is then vocab-sized: one
     hash agg on the pair key + one narrow map applying the replace, with
-    the vocab localCheckpoint'd per step so lineage stays flat.  The
+    the vocab barriered per step so lineage stays flat.  The
     only driver read per step is the ONE winning (left, right, count)
     row — the same sanctioned k-row pattern as the k-means/PQ trainers
     (kmeans.py).  The merge loop never rescans documents."""
@@ -913,7 +874,7 @@ def _bpe_train_states(documents: DataFrame, n_merges: int):
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     L, R = "\x01", "\x02"
-    vocab = (
+    vocab = barrier(
         documents.select(F.explode(tokens(F.col("text"))).alias("word"))
         .filter(F.length("word") > 0)
         .filter(~F.col("word").rlike(f"[{L}{R}]"))
@@ -921,7 +882,6 @@ def _bpe_train_states(documents: DataFrame, n_merges: int):
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn("enc", F.regexp_replace("word", "(.)", f"{L}$1{R}"))
         .select("word", "enc", "freq")
-        .localCheckpoint(eager=False)
     )
     # symbol array back out of the delimited string; Spark's
     # sequence(1, 0) DESCENDS ([1, 0]) where DuckDB's generate_series is
@@ -954,13 +914,15 @@ def _bpe_train_states(documents: DataFrame, n_merges: int):
         l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
         merges.append((step, l, r, l + r, cnt))
         pattern, repl = f"{L}{l}{R}{L}{r}{R}", f"{L}{l}{r}{R}"
-        vocab = vocab.withColumn(
-            "enc",
-            F.when(
-                F.col("enc").contains(pattern),
-                F.replace("enc", F.lit(pattern), F.lit(repl)),
-            ).otherwise(F.col("enc")),
-        ).localCheckpoint(eager=False)
+        vocab = barrier(
+            vocab.withColumn(
+                "enc",
+                F.when(
+                    F.col("enc").contains(pattern),
+                    F.replace("enc", F.lit(pattern), F.lit(repl)),
+                ).otherwise(F.col("enc")),
+            )
+        )
     merges_df = spark.createDataFrame(
         merges,
         "step long, left string, right string, merged string, "
@@ -1041,12 +1003,11 @@ def cdc_segment_census(documents: DataFrame) -> DataFrame:
     hash agg on seg_hash with linear join fan-in, exactly like
     boilerplate_stats.  Blank docs have zero segments and re-enter via
     the final left join (NULL ratio)."""
-    # Materialize the tokenized table once (r7, lazy localCheckpoint —
-    # same device as dedup.py's posting tables): it feeds the segment
-    # explode AND the final per-doc re-join, which otherwise re-ran the
-    # whole tokenize from parquet (plan showed 6 scans / 2 Windows / 0
-    # reuse for this query before the barrier).
-    t = tokens_with_count(documents).localCheckpoint(eager=False)
+    # The tokenized table is barriered (r7): it feeds the segment explode
+    # AND the final per-doc re-join, which otherwise re-ran the whole
+    # tokenize from parquet (plan showed 6 scans / 2 Windows / 0 reuse
+    # for this query before the barrier).
+    t = barrier(token_table(documents, "doc_id", n_tokens=True))
     # blank docs split to [''] — the guard stops the phantom segment
     tokd = t.select(
         "doc_id",
@@ -1069,19 +1030,21 @@ def cdc_segment_census(documents: DataFrame) -> DataFrame:
     )
     # collect_list order is nondeterministic under shuffle — sort by the
     # carried pos before joining the tokens back into the segment string.
-    seg = s.groupBy("doc_id", "seg_id").agg(
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "token"))),
-                    lambda x: x["token"],
-                ),
-            )
-        ).alias("seg_hash"),
-    ).localCheckpoint(eager=False)
-    # ^ seg feeds the corpus census AND the per-doc join; without the
+    # seg feeds the corpus census AND the per-doc join; without the
     # barrier the per-doc window + segment aggregate executed twice.
+    seg = barrier(
+        s.groupBy("doc_id", "seg_id").agg(
+            F.md5(
+                F.concat_ws(
+                    " ",
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "token"))),
+                        lambda x: x["token"],
+                    ),
+                )
+            ).alias("seg_hash"),
+        )
+    )
     cf = seg.groupBy("seg_hash").agg(F.count(F.lit(1)).alias("n_occ"))
     pd = (
         seg.join(cf, "seg_hash")
@@ -1127,14 +1090,13 @@ def lm_bigram_score(documents: DataFrame) -> DataFrame:
     rounding is engine-defined — see retrieval.py's rational-idf note).
 
     One tokenize pass: the per-doc bigram count table ``dbg`` is built
-    once (localCheckpoint — ContextCleaner-managed, see
-    dedup.jaccard_pairs) and BOTH the global bigram counts and the
+    once (barriered) and BOTH the global bigram counts and the
     context counts derive from it by hash aggregation (map-side partial);
     scoring is two equi-joins on (w1, w2) / (w1) plus a final hash agg on
     doc_id.  No windows, no all-pairs, no corpus-order dependence —
     every sum is order-independent integer arithmetic.  Docs with < 2
     tokens have no transitions: n_transitions = 0, score_ppm NULL."""
-    t = tokens_with_count(documents)
+    t = token_table(documents, "doc_id", n_tokens=True)
     tr = t.select(
         "doc_id",
         F.explode(
@@ -1147,11 +1109,7 @@ def lm_bigram_score(documents: DataFrame) -> DataFrame:
             ).otherwise(F.expr("array()").cast("array<struct<w1:string,w2:string>>"))
         ).alias("bg"),
     ).select("doc_id", "bg.w1", "bg.w2")
-    dbg = (
-        tr.groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
+    dbg = barrier(tr.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("cnt")))
     bg = dbg.groupBy("w1", "w2").agg(
         F.sum("cnt").cast("decimal(38,0)").alias("c12")
     )
@@ -1225,7 +1183,7 @@ def distinct_count_kmv(
     # blank docs tokenize to [''] whose 1-gram would be a phantom; the
     # word_ngrams too-short guard plus the '' filter covers n == 1 too
     tok = (
-        _gram_table(documents, n)
+        gram_table(documents, n)
         .filter(F.col("gram") != "")
         .select(
             F.conv(F.substring(F.md5("gram"), 1, 12), 16, 10)
@@ -1270,7 +1228,7 @@ def doc_ngram_novelty(documents: DataFrame, n: int = 3) -> DataFrame:
     first-owner table.  No window, no ordering, no pair join: novelty of
     10^12 docs costs the same shape as a document-frequency count.
     Blank/short docs have zero grams: n_grams = 0, novelty NULL."""
-    g = _gram_table(documents, n, "doc_id", distinct_grams=True).filter(
+    g = gram_table(documents, n, "doc_id", distinct_grams=True).filter(
         F.col("gram") != ""
     )
     first = g.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
@@ -1315,14 +1273,12 @@ def source_overlap_matrix(
     guillotine, same role as jaccard_pairs' df cap — sizes count ALL
     grams so the per-pair Jaccard stays comparable).  NULL source is a
     real slice and kept (eqNullSafe pair join keys)."""
-    sg = (
-        _gram_table(documents, n, "source", distinct_grams=True)
+    # referenced 3-4x (both self-join sides, sizes, optional keep):
+    # barriered instead of re-tokenizing the corpus per reference
+    sg = barrier(
+        gram_table(documents, n, "source", distinct_grams=True)
         .filter(F.col("gram") != "")
         .distinct()
-        # referenced 3-4x (both self-join sides, sizes, optional keep):
-        # materialize once instead of re-tokenizing the corpus per
-        # reference (ContextCleaner-managed — see dedup.jaccard_pairs)
-        .localCheckpoint(eager=False)
     )
     if max_gram_sources is not None:
         keep = (

@@ -29,7 +29,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.columns import cosine, cosine_safe, tokens, word_ngrams
+from ..functions.columns import cosine, cosine_safe, gram_table, token_table
+from ..plans.barrier import barrier, materialized
 from .textstats import simhash64
 
 MINHASH_SEEDS = ("s0/", "s1/", "s2/", "s3/")
@@ -47,26 +48,9 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def _tokens_materialized(documents: DataFrame) -> DataFrame:
-    """(doc_id, tok: array<string>) with the split FORCED to happen once.
-
-    ``explode(array(split(...)))`` is a generator, and projection collapsing
-    cannot inline expressions through a generator boundary — without it,
-    Catalyst substitutes the ``split`` subtree into every ``element_at``
-    reference and interpreted higher-order functions re-split the text per
-    element (measured: a 5k-row band join took 38 s because each probe
-    re-evaluated ~200 splits; with this barrier the same join is <1 s)."""
-    return documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col("text")))).alias("tok")
-    )
-
-
 def shingle_table(documents: DataFrame, n: int = 2) -> DataFrame:
     """(doc_id, shingle) distinct word-n-gram postings."""
-    return _tokens_materialized(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(word_ngrams(F.col("tok"), n))).alias("shingle"),
-    )
+    return gram_table(documents, n, "doc_id", distinct_grams=True, alias="shingle")
 
 
 def minhash_signatures_from(
@@ -97,57 +81,43 @@ def minhash_signatures_from(
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
-def jaccard_pairs(
+def _posting_overlaps(
     shingles: DataFrame,
-    candidates: DataFrame = None,
-    threshold: float = 0.5,
     max_shingle_df: int = None,
     sizes: DataFrame = None,
+    candidates: DataFrame = None,
 ) -> DataFrame:
-    """Exact Jaccard over shingle sets for doc pairs (a_id < b_id).
+    """(a_id, b_id, inter, a_size, b_size): the shared-posting count of
+    doc pairs (a_id < b_id) and each doc's posting count — the core of
+    ``jaccard_pairs`` and ``containment_pairs``.
 
-    With ``candidates`` (a_id, b_id) the verify is restricted to those
-    pairs; otherwise all pairs sharing >= 1 shingle are scored.
-    ``max_shingle_df`` drops shingles whose document frequency exceeds the
-    cap before pairing (posting-list guillotine for scale).  ``sizes``
-    (r7) lets a caller that already aggregated per-doc shingle counts
-    (minhash_lsh_pairs folds them into the signature aggregate) pass the
-    (doc_id, set_size) table instead of paying a second full pass over
-    the postings here; only valid when it equals
-    ``shingles.groupBy(doc_id).count()`` over THESE postings."""
-    has_df_col = False
-    if max_shingle_df is not None:
-        # ONE corpus tokenize pass + ONE df aggregate (r7, guide §1.2 /
-        # §2.3): checkpoint the RAW posting table so the cap aggregate and
-        # the join probe side share a single tokenize of the corpus (the
-        # pre-r7 shape re-derived ``shingles`` on both sides of the cap
-        # join — two full corpus scans), and ANNOTATE postings with their
-        # df instead of semi-joining a keep-list, so the all-pairs branch
-        # below reuses the same aggregate for its df >= 2 filter instead
-        # of running a second one.  localCheckpoint (not persist) on
-        # purpose: its RDD blocks are ContextCleaner-managed and freed
-        # when the result is garbage-collected, whereas a Dataset persist
-        # stays in the CacheManager until an explicit unpersist — a leak
-        # across a long session.  Lazy (eager=False, r7): materialization
-        # happens inside the first action instead of as a separate
-        # blocking job — same work, one less scheduling barrier.  On a
-        # real cluster with executor loss, use reliable checkpointing or
-        # a table write between stages instead.
-        shingles = shingles.localCheckpoint(eager=False)
+    Without ``candidates`` every pair sharing >= 1 shingle is counted.
+    The raw postings are barriered once and annotated with their
+    document frequency ``_df`` from ONE aggregate, which serves both the
+    ``max_shingle_df`` cap (posting-list guillotine for scale; sizes are
+    counted after the cap) and the df >= 2 filter on the join side (a
+    df-1 posting can never pair).  The annotated table is barriered too,
+    so the sizes aggregate and both self-join sides read one tokenize of
+    the corpus.
+
+    With ``candidates`` (a_id, b_id) the posting join is routed THROUGH
+    the pair list instead — |pairs| x |shingles-per-doc| instead of
+    sum(df^2), which is what makes LSH verification linear-ish at corpus
+    scale; the postings are annotated only when capped.  ``sizes`` lets
+    a caller that already aggregated (doc_id, set_size) over THESE
+    postings (minhash_lsh_pairs folds it into the signature aggregate)
+    skip the sizes pass."""
+    if candidates is None or max_shingle_df is not None:
+        shingles = barrier(shingles)
         dfs = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        shingles = shingles.join(
-            dfs.filter(F.col("_df") <= max_shingle_df), "shingle"
-        ).localCheckpoint(eager=False)
-        has_df_col = True
+        if max_shingle_df is not None:
+            dfs = dfs.filter(F.col("_df") <= max_shingle_df)
+        shingles = barrier(shingles.join(dfs, "shingle"))
     if sizes is None:
         sizes = shingles.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("set_size")
         )
     if candidates is not None:
-        # Verify-only-candidates: route the posting join THROUGH the pair
-        # list instead of exploding all co-occurring docs — |pairs| x
-        # |shingles-per-doc| instead of sum(df^2).  This is what makes LSH
-        # verification linear-ish at corpus scale.
         a = shingles.select(F.col("doc_id").alias("a_id"), "shingle")
         b = shingles.select(F.col("doc_id").alias("b_id"), "shingle")
         inter = (
@@ -157,23 +127,7 @@ def jaccard_pairs(
             .agg(F.count(F.lit(1)).alias("inter"))
         )
     else:
-        # All-pairs mode: postings with document frequency 1 can never
-        # produce a pair — drop them from the JOIN side only (sizes above
-        # already counted them, so Jaccard is unchanged).  With the df
-        # annotation present this is a FILTER on the checkpointed table;
-        # otherwise fall back to a dedicated aggregate.
-        if has_df_col:
-            joinable = shingles.filter(F.col("_df") >= 2).select(
-                "doc_id", "shingle"
-            )
-        else:
-            paired = (
-                shingles.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") >= 2)
-                .select("shingle")
-            )
-            joinable = shingles.join(paired, "shingle")
+        joinable = shingles.filter(F.col("_df") >= 2).select("doc_id", "shingle")
         a = joinable.alias("a")
         b = joinable.alias("b")
         inter = (
@@ -186,9 +140,25 @@ def jaccard_pairs(
         )
     sa = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("set_size", "a_size")
     sb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("set_size", "b_size")
+    return inter.join(sa, "a_id").join(sb, "b_id")
+
+
+def jaccard_pairs(
+    shingles: DataFrame,
+    candidates: DataFrame = None,
+    threshold: float = 0.5,
+    max_shingle_df: int = None,
+    sizes: DataFrame = None,
+) -> DataFrame:
+    """Exact Jaccard over shingle sets for doc pairs (a_id < b_id).
+
+    With ``candidates`` (a_id, b_id) the verify is restricted to those
+    pairs; otherwise all pairs sharing >= 1 shingle are scored.
+    ``max_shingle_df`` drops shingles whose document frequency exceeds the
+    cap before pairing; ``sizes`` is a precomputed (doc_id, set_size) over
+    these postings (see ``_posting_overlaps``)."""
     return (
-        inter.join(sa, "a_id")
-        .join(sb, "b_id")
+        _posting_overlaps(shingles, max_shingle_df, sizes, candidates)
         .select(
             "a_id",
             "b_id",
@@ -233,43 +203,7 @@ def containment_pairs(
     1.0 on a small absolute overlap.  Pair the cap with a minimum
     retained-set-size filter downstream if that matters for the
     corpus."""
-    has_df_col = False
-    if max_shingle_df is not None:
-        # Same one-tokenize / one-df-aggregate shape as jaccard_pairs
-        # (r7): raw postings checkpointed once, df annotated onto each
-        # posting, cap + df>=2 both read that single aggregate.  Lazy
-        # checkpoints — materialized inside the first action, not as
-        # separate blocking jobs (see jaccard_pairs note).
-        shingles = shingles.localCheckpoint(eager=False)
-        dfs = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        shingles = shingles.join(
-            dfs.filter(F.col("_df") <= max_shingle_df), "shingle"
-        ).localCheckpoint(eager=False)
-        has_df_col = True
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
-    if has_df_col:
-        joinable = shingles.filter(F.col("_df") >= 2).select("doc_id", "shingle")
-    else:
-        paired = (
-            shingles.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") >= 2)
-            .select("shingle")
-        )
-        joinable = shingles.join(paired, "shingle")
-    a = joinable.alias("a")
-    b = joinable.alias("b")
-    inter = (
-        a.join(b, on=(F.col("a.shingle") == F.col("b.shingle")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("set_size", "a_size")
-    sb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("set_size", "b_size")
-    both = inter.join(sa, "a_id").join(sb, "b_id")
+    both = _posting_overlaps(shingles, max_shingle_df)
     directed = both.select(
         F.explode(
             F.array(
@@ -317,26 +251,23 @@ def _collapse_exact(documents: DataFrame):
     members array is O(B) ids per group (8B bytes for a B-doc identical
     cluster — ~80 MB at B=10^7, comfortably within an executor; the
     texts that the window shape would have concentrated are 3-5 orders
-    larger).  Both outputs are checkpointed (localCheckpoint —
-    ContextCleaner-managed, see jaccard_pairs note): groups feeds reps
-    AND mapping; mapping is referenced four times by _expand_rep_pairs,
-    and is checkpointed NARROW (no text column) so those four scans
-    never deserialize document bodies."""
-    groups = (
-        documents.groupBy(F.md5("text").alias("_h"))
-        .agg(
+    larger).  Both outputs are barriered: groups feeds reps AND mapping;
+    mapping is referenced four times by _expand_rep_pairs, and is
+    barriered NARROW (no text column) so those four scans never
+    deserialize document bodies."""
+    groups = barrier(
+        documents.groupBy(F.md5("text").alias("_h")).agg(
             F.min("doc_id").alias("rep_id"),
             # all texts in a group are byte-identical (md5 key), so
             # first() is value-deterministic
             F.first("text").alias("text"),
             F.collect_list("doc_id").alias("_members"),
         )
-        .localCheckpoint(eager=False)
     )
-    mapping = (
-        groups.select("rep_id", F.explode("_members").alias("doc_id"))
-        .select("doc_id", "rep_id")
-        .localCheckpoint(eager=False)
+    mapping = barrier(
+        groups.select("rep_id", F.explode("_members").alias("doc_id")).select(
+            "doc_id", "rep_id"
+        )
     )
     return mapping, groups.select(F.col("rep_id").alias("doc_id"), "text")
 
@@ -439,27 +370,20 @@ def minhash_lsh_pairs(
     (explicit recall trade, default off).
 
     The posting table feeds BOTH the signature build and the exact-Jaccard
-    verify; it is materialized once (local checkpoint, whose RDD
-    blocks the ContextCleaner frees on GC — unlike a Dataset persist,
-    which the CacheManager holds until explicit unpersist) so the corpus
-    is tokenized/shingled ONCE per invocation instead of twice (at 10^12
-    docs the duplicate expression tree would re-read every document).
-    Checkpoints are LAZY (r7): blocks materialize inside the first action
-    and are shared by every later reference — identical total work to the
-    former eager shape, minus one blocking job barrier per checkpoint."""
+    verify; it is barriered so the corpus is tokenized/shingled ONCE per
+    invocation instead of twice (at 10^12 docs the duplicate expression
+    tree would re-read every document)."""
     if collapse_exact:
         mapping, docs = _collapse_exact(documents)
     else:
         mapping, docs = None, documents
-    sh = shingle_table(docs, n).localCheckpoint(eager=False)
+    sh = barrier(shingle_table(docs, n))
     # ONE doc-level aggregate (r7): signatures + set_size in the same
-    # pass, lazily checkpointed — it feeds the band postings, the Jaccard
+    # pass, barriered — it feeds the band postings, the Jaccard
     # denominators, AND band eligibility below (pre-r7: three separate
     # full passes over the posting table — signature agg, sizes agg, and
     # a distinct doc_id agg).
-    sig = minhash_signatures_from(sh, with_size=True).localCheckpoint(
-        eager=False
-    )
+    sig = barrier(minhash_signatures_from(sh, with_size=True))
     # F.concat (not concat_ws): NULL-propagating like SQL ||, so a doc with
     # no shingles gets a NULL band and drops out of the equi-join cleanly.
     # Both bands go through ONE posting table keyed (band_idx, band_val)
@@ -714,9 +638,7 @@ def _assert_star_forest(sym: DataFrame) -> None:
         )
 
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 25, checkpoint_every: int = 1
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iterations: int = 25) -> DataFrame:
     """Cluster near-duplicate pairs into components: (node, comp) where
     comp = min node id in the connected component.
 
@@ -727,8 +649,8 @@ def connected_components(
     minimum, converging in O(log n) rounds — unlike plain min-label
     propagation, whose round count is the component DIAMETER (a 10^6-long
     near-dup chain at corpus scale would need 10^6 barriers).
-    ``localCheckpoint`` per round truncates lineage (standard Spark
-    iterative discipline).
+    A barrier per round truncates lineage (standard Spark iterative
+    discipline).
 
     Convergence detection costs ONE action and no extra shuffle per round:
     an order-independent (count, sum, xor) checksum over xxhash64(u, v)
@@ -739,33 +661,29 @@ def connected_components(
     are emitted, so a checksum collision or a pathological composed-round
     fixed point can never mislabel — it raises.  Deterministic output.
     """
-    # Checkpoint the NARROW (u, v) projection of the pair table first:
+    # Barrier the NARROW (u, v) projection of the pair table first:
     # both the node universe and the edge loop derive from it, so the
     # pair-finding pipeline upstream (banding, grouping, verify joins)
     # runs exactly once — previously `nodes` replayed everything above
     # the pair table a second time inside the final label job (r7;
     # guide §1.2 "don't compute what you already computed").
-    edges = pairs.select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).localCheckpoint(eager=False)
+    edges = barrier(pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")))
     nodes = (
         edges.select("u")
         .unionByName(edges.select(F.col("v").alias("u")))
         .distinct()
         .select(F.col("u").alias("node"))
     )
-    # Lazy checkpoints (r7): the signature collect that follows each
-    # round materializes the checkpoint inside its own action — one job
-    # per round instead of two (ckpt job + signature job).  Edges live in
-    # canonical (u < v) orientation throughout — half the checkpointed
-    # rows, half the distinct/signature bytes; the symmetric view each
-    # star needs is a free disjoint union (_sym_view).
-    canon = _canonical_edges(edges).localCheckpoint(eager=False)
+    # The signature collect that follows each round writes that round's
+    # barrier (its shuffle map stages run when the barrier is built; see
+    # plans.barrier).  Edges live in canonical (u < v) orientation
+    # throughout — half the barriered rows, half the distinct/signature
+    # bytes; the symmetric view each star needs is a free disjoint union
+    # (_sym_view).
+    canon = barrier(_canonical_edges(edges))
     sig = _edge_set_signature(canon)
-    for i in range(max_iterations):
-        new_canon = _star(_star(canon, larger=True), larger=False)
-        if (i + 1) % checkpoint_every == 0:
-            new_canon = new_canon.localCheckpoint(eager=False)
+    for _ in range(max_iterations):
+        new_canon = barrier(_star(_star(canon, larger=True), larger=False))
         new_sig = _edge_set_signature(new_canon)
         canon = new_canon
         if new_sig == sig:
@@ -866,19 +784,18 @@ def embedding_dup_pairs(
         .select(
             F.col("a.vec_id").alias("a_id"),
             F.col("b.vec_id").alias("b_id"),
-            F.explode(
-                F.array(
-                    F.round(
-                        cosine_from_norms(
-                            F.col("a.embedding"),
-                            F.col("b.embedding"),
-                            F.col("a._n"),
-                            F.col("b._n"),
-                        ),
-                        6,
-                    )
-                )
-            ).alias("cos_sim"),
+            materialized(
+                F.round(
+                    cosine_from_norms(
+                        F.col("a.embedding"),
+                        F.col("b.embedding"),
+                        F.col("a._n"),
+                        F.col("b._n"),
+                    ),
+                    6,
+                ),
+                "cos_sim",
+            ),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -952,22 +869,9 @@ def substring_dup_spans(documents: DataFrame, k: int = 8) -> DataFrame:
     length, so no hot task exists by construction.  Blank / sub-``k``
     documents produce zero windows and re-enter via the final left join.
     """
-    # explode(array(...)) barrier: split once per row (see
-    # _tokens_materialized), then n_tokens inlined against the array.
-    t = documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col("text")))).alias("tok")
-    ).select(
-        "doc_id",
-        "tok",
-        F.when(
-            (F.size("tok") == 1) & (F.element_at("tok", 1) == ""), F.lit(0)
-        )
-        .otherwise(F.size("tok"))
-        .cast("long")
-        .alias("n_tokens"),
-    ).localCheckpoint(eager=False)
-    # ^ t feeds the window-hash explode AND the final per-doc re-join;
-    # the lazy barrier stops the tokenize re-running per consumer (r7).
+    # t feeds the window-hash explode AND the final per-doc re-join; the
+    # barrier stops the tokenize re-running per consumer (r7).
+    t = barrier(token_table(documents, "doc_id", n_tokens=True))
     # sequence(1, n) DESCENDS in Spark when n < 1 — the when-guard makes
     # sub-k documents produce an empty array (DuckDB's generate_series is
     # already empty there).
@@ -975,19 +879,19 @@ def substring_dup_spans(documents: DataFrame, k: int = 8) -> DataFrame:
         F.sequence(F.lit(1), (F.col("n_tokens") - (k - 1)).cast("int")),
         lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("tok"), i, k))),
     )
-    wins = t.select(
-        "doc_id",
-        F.posexplode(
-            F.when(F.col("n_tokens") >= k, win_hashes).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("pos", "w_hash"),
-    ).select(
-        "doc_id", (F.col("pos") + 1).alias("start"), "w_hash"
-    ).localCheckpoint(eager=False)
-    # ^ wins feeds the occurrence aggregate AND the postings join; the
+    # wins feeds the occurrence aggregate AND the postings join; the
     # barrier runs the per-token md5 window transform once (r7 — the
     # heaviest per-row compute in this operator).
+    wins = barrier(
+        t.select(
+            "doc_id",
+            F.posexplode(
+                F.when(F.col("n_tokens") >= k, win_hashes).otherwise(
+                    F.array().cast("array<string>")
+                )
+            ).alias("pos", "w_hash"),
+        ).select("doc_id", (F.col("pos") + 1).alias("start"), "w_hash")
+    )
     dup_hashes = (
         wins.groupBy("w_hash")
         .agg(F.count(F.lit(1)).alias("n_occ"))
@@ -1071,18 +975,20 @@ def incremental_dedup_census(base: DataFrame, new: DataFrame) -> DataFrame:
     base_norm = (
         base.select(F.md5(normalized_text(F.col("text"))).alias("nh")).distinct()
     )
-    # One pass over the batch (r7 lazy localCheckpoint): n feeds the two
-    # min-id aggregates AND the gate join — unbarriered, each consumer
-    # replayed the batch union and both md5/normal-form projections
-    # (final plan: 15 of 17 parquet scans).  The checkpoint is
-    # batch-sized and 4 narrow columns, so the memory trade is the
-    # operator's own "daily work scales with the delta" contract.
-    n = new.select(
-        "doc_id",
-        "source",
-        F.md5("text").alias("h"),
-        F.md5(normalized_text(F.col("text"))).alias("nh"),
-    ).localCheckpoint(eager=False)
+    # One pass over the batch (r7 barrier): n feeds the two min-id
+    # aggregates AND the gate join — unbarriered, each consumer replayed
+    # the batch union and both md5/normal-form projections (final plan:
+    # 15 of 17 parquet scans).  The barrier is batch-sized and 4 narrow
+    # columns, so the memory trade is the operator's own "daily work
+    # scales with the delta" contract.
+    n = barrier(
+        new.select(
+            "doc_id",
+            "source",
+            F.md5("text").alias("h"),
+            F.md5(normalized_text(F.col("text"))).alias("nh"),
+        )
+    )
     min_h = n.groupBy("h").agg(F.min("doc_id").alias("min_id_h"))
     min_nh = n.groupBy("nh").agg(F.min("doc_id").alias("min_id_nh"))
     j = (
@@ -1182,7 +1088,7 @@ def semantic_dedup(
                 f"SemDeDup uses ~1e5 clusters at web scale) or the bound"
             )
     # integer dot/norms behind a generator barrier (one eval per row, not
-    # one per downstream reference — see _tokens_materialized)
+    # one per downstream reference)
     stats = (
         f"named_struct("
         f"'dot', aggregate(zip_with(qv, cv, (x, y) -> x * y), 0L, (a, v) -> a + v), "
@@ -1204,14 +1110,13 @@ def semantic_dedup(
             "vec_id",
             "embedding",
             "cell",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.expr(stats).alias("q"),
-                        l2norm(F.col("embedding")).alias("nrm"),
-                    )
-                )
-            ).alias("_s"),
+            materialized(
+                F.struct(
+                    F.expr(stats).alias("q"),
+                    l2norm(F.col("embedding")).alias("nrm"),
+                ),
+                "_s",
+            ),
         )
         .select(
             "vec_id",
@@ -1257,7 +1162,7 @@ def semantic_dedup(
             F.col("b.vec_id").alias("other_id"),
             F.col("a.centroid_sim").alias("my_sim"),
             F.col("b.centroid_sim").alias("other_sim"),
-            F.explode(F.array(F.round(safe_cos, 6))).alias("_cos"),
+            materialized(F.round(safe_cos, 6), "_cos"),
         )
         .filter(F.col("_cos").isNotNull() & (F.col("_cos") >= threshold))
         .select("vec_id", "other_id", "my_sim", "other_sim")

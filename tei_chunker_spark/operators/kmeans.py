@@ -34,6 +34,7 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.barrier import materialized
 from .similarity import _ranked, cell_pairs
 
 QUANT_SCALE = 10000
@@ -77,9 +78,9 @@ def with_cell(q: DataFrame, centroids: Sequence[Sequence[int]]) -> DataFrame:
     the smallest cell id.  The distance array is materialized behind a
     generator barrier so the min and the position lookup don't each
     recompute k distances."""
-    return q.select(
-        "*", F.explode(F.array(F.expr(l2sq_dists(centroids)))).alias("_dists")
-    ).select(*q.columns, argmin("_dists").alias("cell"))
+    return q.select("*", materialized(F.expr(l2sq_dists(centroids)), "_dists")).select(
+        *q.columns, argmin("_dists").alias("cell")
+    )
 
 
 def train_ivf_centroids(
@@ -139,9 +140,9 @@ def _with_probe_cells(
         f"slice(array_sort(transform({l2sq_dists(centroids)}, "
         f"(d, i) -> named_struct('d', d, 'c', i))), 1, {int(n_probe)})"
     )
-    exploded = q.select(
-        "*", F.explode(F.array(F.expr(probe_expr))).alias("_pc")
-    ).select(*q.columns, F.posexplode("_pc").alias("probe_rank", "_s"))
+    exploded = q.select("*", materialized(F.expr(probe_expr), "_pc")).select(
+        *q.columns, F.posexplode("_pc").alias("probe_rank", "_s")
+    )
     return exploded.select(
         *q.columns, "probe_rank", F.col("_s.c").cast("int").alias("cell")
     )
@@ -237,5 +238,5 @@ def ann_ivf_range_search(
         "query_id",
         "neighbor_id",
         "cell",
-        F.explode(F.array(F.round("cos_sim_raw", 6))).alias("cos_sim"),
+        materialized(F.round("cos_sim_raw", 6), "cos_sim"),
     ).filter(F.col("cos_sim").isNotNull() & (F.col("cos_sim") >= min_sim))

@@ -25,6 +25,7 @@ from .kmeans import (
     quantized,
     train_ivf_centroids,
 )
+from ..plans.barrier import materialized
 from .ranking import two_stage_topk
 
 
@@ -147,9 +148,7 @@ def pq_train(
     w = dim // m
     books = [[v[j * w : (j + 1) * w] for v in init] for j in range(m)]
     for _ in range(int(iters)):
-        with_d = q.select(
-            "qv", F.explode(F.array(_pq_dists(books, w))).alias("_d")
-        )
+        with_d = q.select("qv", materialized(_pq_dists(books, w), "_d"))
         cells = F.array(*[argmin(f"_d.d{j}") for j in range(m)])
         sums = (
             with_d.select(cells.alias("_cells"), F.posexplode("qv").alias("i", "v"))
@@ -183,11 +182,10 @@ def _pq_with_dists(embeddings: DataFrame, books, w: int) -> DataFrame:
     re-inlining trap dedup.py documents)."""
     m = len(books)
     q = embeddings.select("vec_id", quantized("embedding").alias("qv"))
-    q = q.select("vec_id", F.explode(F.array("qv")).alias("qv"))
-    return q.select(
-        "vec_id",
-        F.explode(F.array(_pq_dists(books, w))).alias("_d"),
-    ).select("vec_id", *[F.col(f"_d.d{j}").alias(f"_d{j}") for j in range(m)])
+    q = q.select("vec_id", materialized(F.col("qv"), "qv"))
+    return q.select("vec_id", materialized(_pq_dists(books, w), "_d")).select(
+        "vec_id", *[F.col(f"_d.d{j}").alias(f"_d{j}") for j in range(m)]
+    )
 
 
 def pq_encode(

@@ -47,8 +47,8 @@ from pyspark.sql import functions as F
 from ..functions.columns import (
     WS_CLASS,
     token_count,
+    token_table,
     tokens,
-    tokens_with_count,
 )
 
 SCALE = 10**6
@@ -121,7 +121,7 @@ def phrase_match_census(documents: DataFrame, phrase: str) -> DataFrame:
         raise ValueError("phrase_match_census: phrase has no terms")
     p = len(terms)
     needle = " ".join(terms)
-    t = tokens_with_count(documents)
+    t = token_table(documents, "doc_id", n_tokens=True)
     starts = F.filter(
         F.sequence(F.lit(1), (F.col("n_tokens") - (p - 1)).cast("int")),
         lambda i: F.concat_ws(" ", F.slice(F.col("tok"), i, p)) == needle,

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import cosine, dot, l2norm
+from ..plans.barrier import materialized
 from .ranking import two_stage_topk
 
 
@@ -33,9 +34,7 @@ def with_norm(df: DataFrame, vec_col: str, alias: str) -> DataFrame:
     writing the pair score as dot / (na * nb) evaluates the identical
     IEEE expression tree (same l2norm subtree, same multiply/divide
     order), so scores are bit-for-bit unchanged."""
-    return df.select(
-        "*", F.explode(F.array(l2norm(F.col(vec_col)))).alias(alias)
-    )
+    return df.select("*", materialized(l2norm(F.col(vec_col)), alias))
 
 
 def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
