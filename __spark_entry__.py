@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tei_chunker_spark.config import ChunkerConfig, JobConfig
-from tei_chunker_spark.corpus import INPUT_SCHEMA_DDL, doc_to_row
+from tei_chunker_spark.corpus import INPUT_SCHEMA_DDL, row_frame
 from tei_chunker_spark.operators import (
     corpusops,
     dedup,
@@ -43,7 +43,7 @@ from tei_chunker_spark.operators.extract import (
     media_ref_pipeline,
     section_metadata_pipeline,
 )
-from tei_chunker_spark.sources.tables import load, table_rows, table_size, widen_small
+from tei_chunker_spark.sources.tables import load, spread_scan
 
 # Golden fixtures: the interleaved corpus is a pure function of doc_id, so
 # the extraction family's expected output is precomputed with the pure-
@@ -79,20 +79,10 @@ _FLAGSHIP_JOB_PRESPREAD = JobConfig(
 def _interleaved_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic interleaved-span input table keyed by the driver's
     documents.doc_id (BASELINE.json input_hint shape; no external data)."""
-    import pandas as pd
 
     def gen(batches):
         for pdf in batches:
-            rows = [doc_to_row(str(int(d))) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "spans": [
-                        [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-                        for r in rows
-                    ],
-                }
-            )
+            yield row_frame(str(int(d)) for d in pdf["doc_id"])
 
     ids = load(spark, sf_dir, "documents").select("doc_id")
     # Generation parallelism follows the session's core count instead of a
@@ -120,10 +110,7 @@ def _docs_with_exact_dups(
         (F.col("doc_id") + 200000).alias("doc_id"), "text"
     )
     u = d.select("doc_id", "text").unionByName(dups)
-    if not widen:
-        return u
-    rows = table_rows(sf_dir, "documents") if widen == "auto" else None
-    return widen_small(u, table_size(sf_dir, "documents"), rows=rows)
+    return spread_scan(u, sf_dir, "documents", widen)
 
 
 def _docs_with_near_dups(
@@ -135,13 +122,9 @@ def _docs_with_near_dups(
         F.concat(F.lit("dup variant "), F.col("text")).alias("text"),
     )
     u = d.select("doc_id", "text").unionByName(dups)
-    if not widen:
-        return u
     # widen AFTER the union so one round-robin exchange serves both
-    # branches (guide §2.5; size-gated no-op at production scale;
-    # "auto" additionally requires the row floor — see tables.py).
-    rows = table_rows(sf_dir, "documents") if widen == "auto" else None
-    return widen_small(u, table_size(sf_dir, "documents"), rows=rows)
+    # branches (guide §2.5).
+    return spread_scan(u, sf_dir, "documents", widen)
 
 
 def _docs_with_case_variants(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,12 +35,15 @@ class ChunkerConfig:
 class JobConfig:
     """Execution knobs. Changing these must NOT change outputs.
 
-    num_buckets is the salt-bucket count used both for the shuffle
-    (repartition key = pmod(xxhash64(doc_id), num_buckets * partitions_per_bucket))
-    and for the checkpoint/resume granularity of the manifest.  At 100 TB /
-    10^12 docs you would raise num_buckets into the thousands so a resume
-    skips completed work at fine granularity; locally small values keep test
-    jobs fast.
+    Two keys come from the same hash.  The shuffle salt is
+    pmod(xxhash64(doc_id), shuffle_partitions); the manifest bucket, the
+    checkpoint/resume granularity, is pmod(xxhash64(doc_id), num_buckets).
+    They align only when one count divides the other: if num_buckets
+    divides shuffle_partitions, every shuffle partition holds rows of one
+    bucket; if shuffle_partitions divides num_buckets, every bucket lands
+    whole in one shuffle partition.  At 100 TB / 10^12 docs you would
+    raise num_buckets into the thousands so a resume skips completed work
+    at fine granularity; locally small values keep test jobs fast.
     """
 
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)

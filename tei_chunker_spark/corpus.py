@@ -19,7 +19,7 @@ CLI: ``python -m tei_chunker_spark.corpus --out /tmp/corpus --docs 2000``
 from __future__ import annotations
 
 import random
-from typing import Dict, List, Tuple
+from typing import Dict, Iterable, List
 
 _WORDS = (
     "model data span table figure method result neural graph query shuffle "
@@ -136,26 +136,30 @@ INPUT_SCHEMA_DDL = (
 )
 
 
+def row_frame(doc_ids: Iterable[str], profile: str = "default"):
+    """Input rows for ``doc_ids`` as the pandas frame ``mapInPandas``
+    emits for INPUT_SCHEMA_DDL (spans as struct tuples)."""
+    import pandas as pd  # local import: executors only
+
+    rows = [doc_to_row(d, profile) for d in doc_ids]
+    return pd.DataFrame(
+        {
+            "doc_id": [r["doc_id"] for r in rows],
+            "spans": [
+                [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+                for r in rows
+            ],
+        }
+    )
+
+
 def corpus_df(spark, n_docs: int, profile: str = "default", id_prefix: str = "doc"):
     """Distributed corpus as a DataFrame — generation is embarrassingly
     parallel (pure function of doc_id), so it scales with the cluster."""
-    import pandas as pd  # local import: executors only
 
     def gen(batches):
         for pdf in batches:
-            rows = [doc_to_row(f"{id_prefix}-{int(i):012d}", profile) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "spans": [
-                        [
-                            (s["kind"], s["text"], s["media_ref"], s["offset"])
-                            for s in r["spans"]
-                        ]
-                        for r in rows
-                    ],
-                }
-            )
+            yield row_frame((f"{id_prefix}-{int(i):012d}" for i in pdf["id"]), profile)
 
     n_parts = max(8, min(256, n_docs // 256 or 1))
     return spark.range(0, n_docs, numPartitions=n_parts).mapInPandas(gen, INPUT_SCHEMA_DDL)

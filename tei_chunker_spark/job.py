@@ -2,12 +2,12 @@
 
 Examples
 --------
-Plain one-shot run (no manifest)::
+One-shot run (no ``--manifest``)::
 
     spark-submit --py-files tei_chunker_spark.zip job.py \
-        --input /data/docs --output /data/spans --no-manifest
+        --input /data/docs --output /data/spans
 
-Resumable run (default)::
+Resumable run (with ``--manifest``)::
 
     python -m tei_chunker_spark.job --input /tmp/corpus \
         --output /tmp/spans --manifest /tmp/manifest --job-id run1
@@ -19,7 +19,12 @@ from __future__ import annotations
 
 import argparse
 
-from .config import ChunkerConfig, JobConfig
+from .config import (
+    DEFAULT_MAX_CHUNK_SIZE,
+    DEFAULT_OVERLAP_SIZE,
+    ChunkerConfig,
+    JobConfig,
+)
 from .manifest import run_resumable
 from .operators.extract import extract_pipeline
 from .sources.session import get_spark
@@ -65,18 +70,18 @@ def build_job_config(args: argparse.Namespace) -> JobConfig:
 
 
 def main(argv=None) -> None:
+    defaults = JobConfig()
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--manifest", default=None)
     ap.add_argument("--job-id", default="job")
-    ap.add_argument("--no-manifest", action="store_true")
-    ap.add_argument("--max-chunk-size", type=int, default=20000)
-    ap.add_argument("--overlap-size", type=int, default=200)
-    ap.add_argument("--num-buckets", type=int, default=16)
-    ap.add_argument("--shuffle-partitions", type=int, default=64)
+    ap.add_argument("--max-chunk-size", type=int, default=DEFAULT_MAX_CHUNK_SIZE)
+    ap.add_argument("--overlap-size", type=int, default=DEFAULT_OVERLAP_SIZE)
+    ap.add_argument("--num-buckets", type=int, default=defaults.num_buckets)
+    ap.add_argument("--shuffle-partitions", type=int, default=defaults.shuffle_partitions)
     ap.add_argument("--wave-size", type=int, default=8)
-    ap.add_argument("--input-format", default="parquet")
+    ap.add_argument("--input-format", default=defaults.input_format)
     ap.add_argument("--master", default=None)
     ap.add_argument("--explain", action="store_true")
     args = ap.parse_args(argv)
@@ -89,7 +94,7 @@ def main(argv=None) -> None:
         arrow_batch=job.arrow_max_records_per_batch,
     )
 
-    if args.no_manifest or not args.manifest:
+    if not args.manifest:
         df = spark.read.format(job.input_format).load(args.input)
         spans = extract_pipeline(df, job)
         if args.explain:

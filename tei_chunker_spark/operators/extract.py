@@ -6,14 +6,15 @@ Physical plan (see SURVEY.md §4.3):
     MapInPandas(extract) -> Sink
 
 One wide dependency total.  The shuffle key is a salt derived from doc_id
-(``pmod(xxhash64(doc_id), P)``) rather than doc_id itself: with 10^12 rows
-the *count* per partition is uniform either way, but routing through an
-explicit narrow-domain salt keeps the partitioning reusable (the same
-bucket id doubles as the checkpoint/resume key in the manifest) and is the
-documented defense against per-row cost skew — oversized papers land in
-different buckets, and small Arrow batches bound how long one straggler
-document can hold a batch (AQE cannot see inside the Python stage, so this
-must be explicit; SURVEY.md §4.2).
+(``pmod(xxhash64(doc_id), P)``, P = shuffle_partitions) rather than doc_id
+itself: with 10^12 rows the *count* per partition is uniform either way,
+but routing through an explicit narrow-domain salt is the documented
+defense against per-row cost skew — oversized papers land in different
+partitions, and small Arrow batches bound how long one straggler document
+can hold a batch (AQE cannot see inside the Python stage, so this must be
+explicit; SURVEY.md §4.2).  The manifest's checkpoint/resume bucket is the
+same hash modulo num_buckets (``manifest.bucket_column``), a different
+key: see JobConfig for when the two align.
 
 The Python stage is the sanctioned vectorized path: data crosses the
 JVM<->Python boundary in columnar Arrow batches via ``mapInPandas``; the
@@ -23,6 +24,7 @@ but there is no row-at-a-time ``udf()`` anywhere.
 """
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame
@@ -55,7 +57,6 @@ def reassembled(df: DataFrame) -> DataFrame:
         .otherwise(0),
     )
     text_of = lambda s: s["text"]  # noqa: E731
-    empty = F.array().cast("array<string>")
     return df.select(
         "doc_id",
         F.concat_ws(
@@ -65,16 +66,30 @@ def reassembled(df: DataFrame) -> DataFrame:
                 text_of,
             ),
         ).alias("xml"),
-        # coalesce: a NULL spans array must degrade like malformed XML does
-        # (zero output spans), not crash the Python stage iterating media.
-        F.coalesce(
-            F.transform(
-                F.filter(ordered, lambda s: s["kind"] == "media"),
-                lambda s: s["media_ref"],
-            ),
-            empty,
-        ).alias("media"),
+        _media_refs(ordered).alias("media"),
     )
+
+
+def _media_refs(spans: Column) -> Column:
+    """The ``media_ref`` of every media span of a spans array, in array
+    order.  Never NULL: a NULL spans array gives an empty array, so it
+    degrades like malformed XML does (zero output spans) instead of
+    crashing the Python stage iterating media."""
+    return F.coalesce(
+        F.transform(
+            F.filter(spans, lambda s: s["kind"] == "media"),
+            lambda s: s["media_ref"],
+        ),
+        F.array().cast("array<string>"),
+    )
+
+
+def _capped(parse, cap: int | None):
+    """``parse`` behind ChunkerConfig.max_doc_chars: a document longer
+    than ``cap`` characters is not parsed and yields no rows."""
+    if cap is None:
+        return parse
+    return lambda xml: [] if len(xml) > cap else parse(xml)
 
 
 def make_batch_extractor(cfg: ChunkerConfig):
@@ -84,21 +99,20 @@ def make_batch_extractor(cfg: ChunkerConfig):
     whole-document fold (reference chunking.py:185-265) runs per row, text
     chunks first, then media passthrough spans — identical observable
     output to core.extract_spans (pinned by tests/test_pipeline.py)."""
+    chunk = _capped(partial(chunk_tei, cfg=cfg), cfg.max_doc_chars)
 
     def extract_batches(batches: Iterable) -> Iterator:
         import pandas as pd
 
-        cap = cfg.max_doc_chars
         for pdf in batches:
             doc_ids, offsets, kinds, texts, refs = [], [], [], [], []
             for doc_id, xml, media in zip(pdf["doc_id"], pdf["xml"], pdf["media"]):
                 offset = 0
-                chunks = [] if (cap is not None and len(xml) > cap) else chunk_tei(xml, cfg)
-                for chunk in chunks:
+                for text in chunk(xml):
                     doc_ids.append(doc_id)
                     offsets.append(offset)
                     kinds.append("text")
-                    texts.append(chunk)
+                    texts.append(text)
                     refs.append(None)
                     offset += 1
                 for ref in media:
@@ -173,14 +187,7 @@ def media_ref_pipeline(df: DataFrame) -> DataFrame:
     computable as a NARROW projection: no salt shuffle, no XML reassembly,
     no Python stage.  Identity with the filtered full pipeline is pinned
     by test_media_ref_pipeline_matches_filtered_extract."""
-    refs = F.coalesce(
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "media"),
-            lambda s: s["media_ref"],
-        ),
-        F.array().cast("array<string>"),
-    )
-    return df.select("doc_id", F.explode(refs).alias("media_ref"))
+    return df.select("doc_id", F.explode(_media_refs(F.col("spans"))).alias("media_ref"))
 
 
 def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
@@ -192,7 +199,7 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     subsection_count), length = direct content only.  Same physical shape
     as extract_pipeline: scan -> one salted exchange -> mapInPandas."""
     salted = _salted(df, job)
-    cap = job.chunker.max_doc_chars
+    meta = _capped(section_meta, job.chunker.max_doc_chars)
 
     def meta_batches(batches: Iterable) -> Iterator:
         import pandas as pd
@@ -200,8 +207,7 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
         for pdf in batches:
             doc_ids, idxs, titles, levels, lengths, counts = [], [], [], [], [], []
             for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                rows = [] if (cap is not None and len(xml) > cap) else section_meta(xml)
-                for i, title, level, length, n_subs in rows:
+                for i, title, level, length, n_subs in meta(xml):
                     doc_ids.append(doc_id)
                     idxs.append(i)
                     titles.append(title)

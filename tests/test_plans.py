@@ -237,45 +237,6 @@ def test_ann_ranking_is_two_stage_topk(spark):
         assert plan.count(", row_number(), 10, Partial") == 2, plan
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Co-located join via bucketing (task-sheet bullet, previously
-    evidenced only by a repartition stand-in): two tables written with
-    save_bucketed on the same key and bucket count must equi-join with
-    ZERO Exchange in the final plan — the shuffle was paid once at write
-    time.  Broadcast is disabled so the planner must actually use the
-    bucket layout (a broadcast join would trivially avoid the shuffle
-    and prove nothing)."""
-    from pyspark.sql import functions as F2
-
-    from tei_chunker_spark.sources.tables import save_bucketed
-
-    docs = spark.range(0, 5000).select(
-        F2.col("id").alias("doc_id"),
-        F2.concat(F2.lit("body "), F2.col("id").cast("string")).alias("text"),
-    )
-    stats = spark.range(0, 5000).select(
-        F2.col("id").alias("doc_id"), (F2.col("id") % 97).alias("score")
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        save_bucketed(docs, "bt_docs", "doc_id", 8, str(tmp_path / "bt_docs"))
-        save_bucketed(stats, "bt_stats", "doc_id", 8, str(tmp_path / "bt_stats"))
-        joined = spark.table("bt_docs").join(spark.table("bt_stats"), "doc_id")
-        assert joined.count() == 5000
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # same-keyed aggregation also rides the bucket layout shuffle-free
-        agg = spark.table("bt_stats").groupBy("doc_id").agg(F2.sum("score"))
-        agg.count()
-        assert "Exchange" not in agg._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bt_docs")
-        spark.sql("DROP TABLE IF EXISTS bt_stats")
-
-
 def test_join_strategy_hints_are_honored(spark):
     """The three join-strategy hints each produce their named physical
     operator on the same query — the manual override surface for when

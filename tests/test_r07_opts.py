@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tei_chunker_spark.operators import dedup
-from tei_chunker_spark.sources.tables import widen_small
+from tei_chunker_spark.sources.tables import spread_scan
 
 
 def _docs(spark, n=60):
@@ -87,62 +87,95 @@ def test_jaccard_df_annotation_matches_two_aggregate_shape(spark):
     assert got == sorted(map(tuple, ref.collect())) and got
 
 
-def test_widen_small_gates_on_size(spark):
+def _table(tmp_path, n_rows=3):
+    """A registry-named parquet file of ``n_rows`` rows in ``tmp_path``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": list(range(n_rows))}), str(path))
+    return path
+
+
+def test_widen_small_gates_on_size(spark, tmp_path, monkeypatch):
+    """The byte cap of ``spread_scan``: a table file above 256 MB or of
+    unknown size keeps the scan narrow, even when its footer clears the
+    row floor; a small one fans out to defaultParallelism, rows intact."""
+    from tei_chunker_spark.sources import tables
+
     df = spark.range(100)
-    assert widen_small(df, 10 << 30) is df          # above cap: no-op
-    assert widen_small(df, 0) is df                 # unknown size: no-op
-    wide = widen_small(df, 1 << 20)
+    sf = str(tmp_path)
+    assert spread_scan(df, sf, "documents", True) is df      # unknown size
+    path = tmp_path / "documents.parquet"
+    with open(path, "wb") as fh:                               # sparse file
+        fh.truncate(tables._WIDEN_CAP_BYTES + 1)
+    monkeypatch.setattr(tables, "_footer_rows", lambda p: 10**9)
+    assert spread_scan(df, sf, "documents", True) is df      # above cap
+    assert spread_scan(df, sf, "documents", "auto") is df
+    path.unlink()
+    _table(tmp_path)
+    wide = spread_scan(df, sf, "documents", True)
     assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r.id for r in wide.collect()) == list(range(100))
 
 
-def test_widen_small_row_floor(spark):
-    """The widen="auto" row gate: a rows hint below _WIDEN_MIN_ROWS keeps
-    the scan narrow (the measured-loss regime), at/above it widens, and
-    no hint preserves the unconditional-widen behavior."""
+def test_widen_small_row_floor(spark, tmp_path, monkeypatch):
+    """The widen="auto" row gate: a footer row count below _WIDEN_MIN_ROWS
+    keeps the scan narrow (the measured-loss regime), at the floor it
+    widens, and widen=True widens regardless of rows."""
     from tei_chunker_spark.sources import tables
 
     df = spark.range(100)
+    sf = str(tmp_path)
+    _table(tmp_path)
     floor = tables._WIDEN_MIN_ROWS
-    assert widen_small(df, 1 << 20, rows=floor - 1) is df
-    wide = widen_small(df, 1 << 20, rows=floor)
+    assert spread_scan(df, sf, "documents", "auto") is df     # 3 rows
+    assert spread_scan(df, sf, "documents", False) is df
+    wide = spread_scan(df, sf, "documents", True)
     assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    assert widen_small(df, 1 << 20, rows=None) is not df
+    monkeypatch.setattr(tables, "_footer_rows", lambda p: floor - 1)
+    assert spread_scan(df, sf, "documents", "auto") is df
+    monkeypatch.setattr(tables, "_footer_rows", lambda p: floor)
+    wide = spread_scan(df, sf, "documents", "auto")
+    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    monkeypatch.undo()
     # footer row counts drive load(widen="auto"): sf0.01 documents is far
     # below the floor, so the loaded frame keeps the scan's partitioning
     narrow = tables.load(spark, "/root/testdata/sf0.01", "documents",
                          widen="auto")
     plain = tables.load(spark, "/root/testdata/sf0.01", "documents")
     assert narrow.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
-    assert tables.table_rows("/root/testdata/sf0.01", "documents") > 0
+    assert 0 < tables._footer_rows("/root/testdata/sf0.01/documents.parquet") < floor
 
 
-def test_load_rejects_unknown_widen():
-    """A typo in the widen flag fails loudly instead of widening."""
+def test_load_rejects_unknown_widen(spark):
+    """A typo in the widen flag fails loudly instead of widening, both in
+    the device and through load()."""
     from tei_chunker_spark.sources import tables
 
-    for bad in ("Auto", "true", 1, None):
+    for bad in ("Auto", "true", 1, 0, None):
         with pytest.raises(ValueError, match="widen"):
-            tables.load(None, "/nonexistent", "documents", widen=bad)
+            spread_scan(None, "/nonexistent", "documents", bad)
+        with pytest.raises(ValueError, match="widen"):
+            tables.load(spark, "/root/testdata/sf0.01", "documents", widen=bad)
 
 
-def test_table_rows_memoizes_only_successful_reads(tmp_path):
-    """An unreadable footer warns and is retried on the next call; the
-    count is memoized once a read succeeds."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+def test_table_rows_memoizes_only_successful_reads(spark, tmp_path):
+    """An unreadable footer warns, leaves the scan narrow and is retried
+    on the next call; the count is memoized once a read succeeds."""
     from tei_chunker_spark.sources import tables
 
+    df = spark.range(100)
     path = tmp_path / "documents.parquet"
     path.write_bytes(b"not parquet")
     with pytest.warns(RuntimeWarning, match="footer row count"):
-        assert tables.table_rows(str(tmp_path), "documents") == 0
+        assert spread_scan(df, str(tmp_path), "documents", "auto") is df
     assert str(path) not in tables._ROWS_MEMO
-    pq.write_table(pa.table({"doc_id": ["a", "b", "c"]}), str(path))
+    _table(tmp_path, n_rows=tables._WIDEN_MIN_ROWS)
     try:
-        assert tables.table_rows(str(tmp_path), "documents") == 3
-        assert tables._ROWS_MEMO[str(path)] == 3
+        wide = spread_scan(df, str(tmp_path), "documents", "auto")
+        assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        assert tables._ROWS_MEMO[str(path)] == tables._WIDEN_MIN_ROWS
     finally:
         tables._ROWS_MEMO.pop(str(path), None)
 
