@@ -63,12 +63,15 @@ _FLAGSHIP_JOB = JobConfig(
 
 # For pipelines fed by _interleaved_corpus: the generator's own
 # round-robin repartition already distributes documents uniformly across
-# cluster parallelism, so the salt exchange inside extract_pipeline would
-# re-shuffle an ALREADY uniformly spread corpus for nothing (guide §2.4
-# "remove shuffles outright" — valid at any scale: round-robin IS the
-# anti-skew distribution the salt exists to approximate).  Outputs are
-# identical either way (assume_bucketed_input is a physical-plan knob,
-# config.py:55-61); file-fed pipelines keep the salt shuffle.
+# cluster parallelism, so the salt exchange would re-shuffle an ALREADY
+# uniformly spread corpus for nothing (guide §2.4 "remove shuffles
+# outright" — valid at any scale: round-robin IS the anti-skew
+# distribution the salt exists to approximate).  extract_pipeline cannot
+# see that itself: an input whose plan already shuffles keeps the salt
+# (reading its partition count would start a job), so this config skips
+# it.  Outputs are identical either way (assume_bucketed_input is a
+# physical-plan knob); a file scan that fills the cores skips the salt
+# under either config.
 _FLAGSHIP_JOB_PRESPREAD = JobConfig(
     chunker=ChunkerConfig(max_chunk_size=500, overlap_size=50),
     shuffle_partitions=32,

@@ -16,19 +16,7 @@ import types
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The reference imports loguru, absent in this container; stub it.
-if "loguru" not in sys.modules:
-    stub = types.ModuleType("loguru")
-
-    class _L:
-        def __getattr__(self, name):
-            return lambda *a, **k: None
-
-    stub.logger = _L()
-    sys.modules["loguru"] = stub
-
 sys.path.insert(0, "/root/reference")
-from tei_chunker.chunking import HierarchicalChunker  # noqa: E402
 
 from tei_chunker_spark.config import ChunkerConfig  # noqa: E402
 from tei_chunker_spark.core import chunk_tei  # noqa: E402
@@ -138,7 +126,30 @@ def rand_doc(rng: random.Random) -> str:
     )
 
 
+# The seeded battery of tests/test_reference_parity.py, also frozen as
+# digests by tests/test_parity_digests.py: per config, the fixtures and
+# 60 random documents from a config-derived seed.
+BATTERY_CONFIGS = [(20000, 200), (500, 50), (100, 50), (100, 200), (80, 5), (137, 55), (1, 10)]
+
+
+def battery(max_chunk_size: int, overlap_size: int) -> list:
+    rng = random.Random(1234 + max_chunk_size * 7 + overlap_size)
+    return [F1, F2, *EDGE] + [rand_doc(rng) for _ in range(60)]
+
+
 def main() -> None:
+    # The reference imports loguru, which may be absent; stub it.
+    if "loguru" not in sys.modules:
+        stub = types.ModuleType("loguru")
+
+        class _L:
+            def __getattr__(self, name):
+                return lambda *a, **k: None
+
+        stub.logger = _L()
+        sys.modules["loguru"] = stub
+    from tei_chunker.chunking import HierarchicalChunker
+
     rng = random.Random(20260816)
     docs = [F1, F2, *EDGE] + [rand_doc(rng) for _ in range(400)]
     configs = [

@@ -2,9 +2,11 @@
 
 A from-scratch, Spark-first re-expression of the computational semantics of
 dmarx/tei-chunker (GROBID TEI XML -> hierarchical chunks), built as a
-one-shuffle DataFrame pipeline over tables of interleaved text+media
-documents: Scan -> Project -> salted Exchange -> MapInPandas -> Sink, with a
-checkpoint manifest for resume and per-partition lineage/metrics.
+DataFrame pipeline over tables of interleaved text+media documents:
+Scan -> Project -> MapInPandas -> Sink, one stage when the scan's byte-sized
+splits already fill the cores, with a salted Exchange before MapInPandas
+otherwise; a checkpoint manifest gives resume and per-partition
+lineage/metrics.
 """
 
 import sys

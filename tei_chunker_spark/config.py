@@ -55,10 +55,11 @@ class JobConfig:
     arrow_max_records_per_batch: int = 256
     input_format: str = "parquet"  # "iceberg" on a real cluster
     output_format: str = "parquet"
-    # When the input table is already bucketed by pmod(xxhash64(doc_id), P)
-    # (Iceberg `bucket(P, doc_id)` partitioning — the recommended layout at
-    # 10^12 docs), the salt repartition is a no-op shuffle of ~all input
-    # bytes; set True to elide it and run the Python stage directly on the
-    # aligned scan partitions. Outputs are identical either way (pinned by
-    # tests); this is purely a physical-plan decision.
+    # The extraction pipeline adds the salt repartition only where the
+    # input cannot fill the cores itself (operators/extract._salted): too
+    # few partitions, a streaming source, or a plan that already shuffles.
+    # Set True to skip it for those inputs too: a table already bucketed
+    # by pmod(xxhash64(doc_id), P) (Iceberg `bucket(P, doc_id)`), or an
+    # input already spread by its own exchange.  Outputs are identical
+    # either way (pinned by tests); this is purely a physical-plan decision.
     assume_bucketed_input: bool = False

@@ -25,13 +25,14 @@ from __future__ import annotations
 
 import json
 import time
+from dataclasses import replace
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
-from .operators.extract import extract_pipeline, salt_column
+from .operators.extract import extract_pipeline, salt_column, salt_exchange
 
 MANIFEST_SCHEMA_DDL = (
     "job_id string, bucket int, status string, input_doc_count long, "
@@ -124,9 +125,16 @@ def run_resumable(
             r["bucket"]: r["n"]
             for r in subset.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        spans = extract_pipeline(subset.drop("bucket"), job).withColumn(
-            "bucket", salt_column(nb)
-        )
+        # Salted here whatever the scan's partition count: a bucket
+        # directory then gets files only from the partitions holding its
+        # salts (at most P / num_buckets when num_buckets divides P), not
+        # one from every scan task.
+        docs = subset.select("doc_id", "spans")
+        if not job.assume_bucketed_input:
+            docs = salt_exchange(docs, job.shuffle_partitions)
+        spans = extract_pipeline(
+            docs, replace(job, assume_bucketed_input=True)
+        ).withColumn("bucket", salt_column(nb))
         spans.write.mode("overwrite").partitionBy("bucket").format(
             job.output_format
         ).save(output_path)

@@ -2,19 +2,18 @@
 
 Physical plan (see SURVEY.md §4.3):
 
-    Scan -> Project(doc_id, spans) -> Exchange(hash(salt), P) ->
+    Scan -> Project(doc_id, spans) -> [Exchange(hash(salt), P)] ->
     MapInPandas(extract) -> Sink
 
-One wide dependency total.  The shuffle key is a salt derived from doc_id
-(``pmod(xxhash64(doc_id), P)``, P = shuffle_partitions) rather than doc_id
-itself: with 10^12 rows the *count* per partition is uniform either way,
-but routing through an explicit narrow-domain salt is the documented
-defense against per-row cost skew — oversized papers land in different
-partitions, and small Arrow batches bound how long one straggler document
-can hold a batch (AQE cannot see inside the Python stage, so this must be
-explicit; SURVEY.md §4.2).  The manifest's checkpoint/resume bucket is the
-same hash modulo num_buckets (``manifest.bucket_column``), a different
-key: see JobConfig for when the two align.
+``_salted`` adds the exchange, on the salt ``pmod(xxhash64(doc_id), P)``
+(P = shuffle_partitions), only where the input cannot fill the cores
+itself.  Over a file scan with enough splits the pipeline is one stage:
+byte-sized splits bound each task's cost.  Small Arrow batches bound how
+long one straggler document can hold a batch (AQE cannot see inside the
+Python stage, so this must be explicit; SURVEY.md §4.2).  The manifest's
+checkpoint/resume bucket is the same hash modulo num_buckets
+(``manifest.bucket_column``), a different key: see JobConfig for when the
+two align.
 
 The Python stage is the sanctioned vectorized path: data crosses the
 JVM<->Python boundary in columnar Arrow batches via ``mapInPandas``; the
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..config import ChunkerConfig, JobConfig
 from ..core import chunk_tei, section_meta
+from ..plans.explain import executed_plan
 
 SPAN_SCHEMA_DDL = "doc_id string, offset int, kind string, text string, media_ref string"
 SECTION_SCHEMA_DDL = (
@@ -140,25 +140,43 @@ def salt_column(num_partitions: int, col: str = "doc_id") -> Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
 
 
-def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
-    """The shared head of every extraction-family pipeline.
-
-    Salt + shuffle FIRST, reassemble AFTER: the concat/sort codegen then
-    runs in the p-way wide stage instead of the scan stage, whose task
-    count is bounded by input splits (a handful of parquet files must not
-    cap CPU parallelism).  The scan stage does nothing but read + shuffle.
-    If the table is already bucketed on the salt key (Iceberg
-    bucket(P, doc_id) layout), skip the shuffle entirely — at 100 TB the
-    repartition would otherwise move every input byte once for nothing."""
-    if job.assume_bucketed_input:
-        return df.select("doc_id", "spans")
-    p = job.shuffle_partitions
+def salt_exchange(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Hash exchange of ``df`` into ``num_partitions`` partitions on the
+    doc_id salt; each salt value lands whole in one partition."""
     return (
-        df.select("doc_id", "spans")
-        .withColumn("_salt", salt_column(p))
-        .repartition(p, "_salt")
+        df.withColumn("_salt", salt_column(num_partitions))
+        .repartition(num_partitions, "_salt")
         .drop("_salt")
     )
+
+
+def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
+    """The shared head of every extraction-family pipeline, and the one
+    place that decides whether its input needs spreading.
+
+    An input that already has at least min(P, defaultParallelism)
+    partitions, none of them behind a shuffle, runs scan -> reassembly ->
+    Python in one stage: an exchange there adds no concurrency, only a
+    full copy of the input and P Python tasks in place of the scan's
+    (each task pays a fixed boundary cost).  A file scan is the usual
+    case; its byte-sized splits bound each task's cost as the salt would.
+    Every other input gets :func:`salt_exchange`, and reassembly runs in
+    the P-way stage after it: streaming inputs, inputs with fewer
+    partitions, and inputs whose plan already has an exchange or a
+    subquery (reading their partition count would start a job).
+    ``assume_bucketed_input`` (an Iceberg bucket(P, doc_id) layout, or a
+    caller that salted the input itself) skips the exchange always."""
+    df = df.select("doc_id", "spans")
+    if job.assume_bucketed_input:
+        return df
+    p = job.shuffle_partitions
+    if not df.isStreaming:
+        plan = executed_plan(df)
+        if "Exchange" not in plan and "Subquery" not in plan:
+            cores = df.sparkSession.sparkContext.defaultParallelism
+            if df.rdd.getNumPartitions() >= min(p, cores):
+                return df
+    return salt_exchange(df, p)
 
 
 def extract_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
@@ -197,7 +215,7 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     array (reference service.py:37-44): one output row per top-level
     section — (doc_id, section_idx, title, level, length,
     subsection_count), length = direct content only.  Same physical shape
-    as extract_pipeline: scan -> one salted exchange -> mapInPandas."""
+    as extract_pipeline: scan -> [salt exchange] -> mapInPandas."""
     salted = _salted(df, job)
     meta = _capped(section_meta, job.chunker.max_doc_chars)
 

@@ -14,6 +14,7 @@ Plans to expect (and what the 100 TB version keeps):
 """
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -328,20 +329,18 @@ def events_value_mad(events: DataFrame, exact: bool = True) -> DataFrame:
     histogram, never the raw values — the high-cardinality-safe path."""
     if not exact:
         return events_value_mad_sketch(events)
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # Explicit GROUPED_AGG function type: this module uses postponed
-    # annotations (PEP 563), which turns the pd.Series type-hint form into
-    # unresolvable strings at decoration time.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def _mad(v):
+    # Series -> scalar type hints make these GROUPED_AGG.  Under postponed
+    # annotations (PEP 563) Spark resolves the hints against the module's
+    # globals, hence the module-level pandas import.
+    @F.pandas_udf("double")
+    def _mad(v: pd.Series) -> float:
         med = v.median()
         return float((v - med).abs().median())
 
     # Spark disallows mixing pandas and JVM aggregates in one agg(), so
     # the group size comes from a second GROUPED_AGG.
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def _n(v):
+    @F.pandas_udf("long")
+    def _n(v: pd.Series) -> int:
         return len(v)
 
     return events.groupBy("event_type").agg(

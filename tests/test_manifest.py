@@ -84,3 +84,34 @@ def test_rerun_completed_job_is_noop(spark, corpus_path, tmp_path):
     n_manifest = read_manifest(spark, manifest).count()
     run_resumable(spark, corpus_path, out, manifest, JOB, job_id="j2")
     assert read_manifest(spark, manifest).count() == n_manifest  # nothing re-done
+
+
+def test_waves_keep_the_salt_exchange(spark, corpus_path, tmp_path, monkeypatch):
+    """Each wave is salted even though its scan alone fills the cores, so
+    a bucket directory gets files only from the shuffle partitions that
+    hold its rows: one, as num_buckets == shuffle_partitions."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tei_chunker_spark.plans.explain import count_exchanges
+
+    out = tmp_path / "out"
+    assert spark.read.parquet(corpus_path).rdd.getNumPartitions() >= min(
+        JOB.shuffle_partitions, spark.sparkContext.defaultParallelism
+    )
+    exchanges = []
+    save = DataFrameWriter.save
+
+    def counting_save(self, path=None, *args, **kwargs):
+        if path == str(out):
+            exchanges.append(count_exchanges(self._df))
+        return save(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", counting_save)
+    run_resumable(
+        spark, corpus_path, str(out), str(tmp_path / "m"), JOB, job_id="salted", wave_size=3
+    )
+    assert exchanges == [1, 1, 1]
+    buckets = sorted(out.glob("bucket=*"))
+    assert len(buckets) == JOB.num_buckets
+    for bucket in buckets:
+        assert len(list(bucket.glob("*.parquet"))) == 1, bucket

@@ -127,18 +127,19 @@ def test_oversized_doc_guardrail(spark):
 
 
 def test_bucketed_input_elides_shuffle_same_output(spark):
-    """assume_bucketed_input drops the Exchange; rows are identical."""
+    """assume_bucketed_input drops the salt exchange even where the rule
+    would add one (a repartitioned input); rows are identical."""
     from tei_chunker_spark.plans.explain import count_exchanges
 
     rows = make_rows([f"bk{i}" for i in range(40)])
-    df = _input_df(spark, rows)
+    df = _input_df(spark, rows).repartition(4)
     bucketed_job = JobConfig(
         chunker=JOB.chunker, shuffle_partitions=8, assume_bucketed_input=True
     )
     with_shuffle = extract_pipeline(df, JOB)
-    without = extract_pipeline(df.repartition(4), bucketed_job)
-    assert count_exchanges(with_shuffle) == 1
-    # repartition(4) itself is one exchange; the pipeline adds none
+    without = extract_pipeline(df, bucketed_job)
+    # repartition(4) itself is one exchange; only the first adds the salt
+    assert count_exchanges(with_shuffle) == 2
     assert count_exchanges(without) == 1
     assert _collect_by_doc(with_shuffle) == _collect_by_doc(without)
 
@@ -161,15 +162,80 @@ def test_salting_distribution(spark):
     assert max(counts) < 3 * min(counts)  # no gross imbalance at n=400
 
 
-def test_physical_plan_shape(spark):
-    """One shuffle, one Python stage, pruned scan: the 100 TB plan."""
+def _salt_repartitions(df) -> int:
+    """Salt exchanges in ``df``'s analyzed plan, which a streaming frame
+    has before it runs."""
+    return df._jdf.queryExecution().analyzed().toString().count(
+        "RepartitionByExpression [_salt"
+    )
+
+
+def test_spread_input_runs_in_the_scan_stage(spark, tmp_path):
+    """An input that fills the cores gets no exchange; one with a single
+    partition and a streaming one each get exactly one salt exchange; all
+    three give the same rows."""
     from pyspark.sql import functions as F
 
-    rows = make_rows(["x1", "x2"])
+    from tei_chunker_spark.plans.explain import count_exchanges, executed_plan
+
+    rows = make_rows([f"x{i}" for i in range(40)])
     df = _input_df(spark, rows).withColumn("extra_col", F.col("doc_id"))
-    plan = extract_pipeline(df, JOB)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-    assert "MapInPandas" in plan
+    assert df.rdd.getNumPartitions() >= min(
+        JOB.shuffle_partitions, spark.sparkContext.defaultParallelism
+    )
+    spread = extract_pipeline(df, JOB)
+    plan = executed_plan(spread)
+    assert count_exchanges(spread) == 0 and "MapInPandas" in plan
+    assert "extra_col" not in plan
+    single = extract_pipeline(df.coalesce(1), JOB)
+    assert count_exchanges(single) == 1 and _salt_repartitions(single) == 1
+
+    path = str(tmp_path / "input")
+    _input_df(spark, rows).write.parquet(path)
+    stream = extract_pipeline(
+        spark.readStream.schema(INPUT_SCHEMA_DDL).parquet(path), JOB
+    )
+    assert _salt_repartitions(stream) == 1
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("spread_rule_stream")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+        streamed = _collect_by_doc(spark.table("spread_rule_stream"))
+    finally:
+        q.stop()
+    expected = _collect_by_doc(spread)
+    assert sum(map(len, expected.values())) > 40
+    assert _collect_by_doc(single) == expected
+    assert streamed == expected
+
+
+def test_building_the_pipeline_starts_no_job(spark, tmp_path):
+    """The spread rule reads partition counts only where that runs no
+    job: a file scan (no exchange in its plan) and the generator-fed
+    corpus (an exchange in its plan, so the salt is kept unread)."""
+    import __spark_entry__ as E
+
+    from tei_chunker_spark.plans.explain import count_exchanges
+
+    from .test_barrier import _job_ids
+
+    path = str(tmp_path / "input")
+    _input_df(spark, make_rows([f"j{i}" for i in range(16)])).write.parquet(path)
+    spark.range(16).withColumnRenamed("id", "doc_id").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    # schema inference runs a job, so both reads come before the block
+    scan = spark.read.parquet(path)
+    corpus = E._interleaved_corpus(spark, str(tmp_path))
+    with _job_ids(spark, "test-extract-build") as job_ids:
+        assert count_exchanges(extract_pipeline(scan, JOB)) == 0
+        extract_pipeline(corpus, E._FLAGSHIP_JOB)
+        extract_pipeline(corpus, E._FLAGSHIP_JOB_PRESPREAD)
+        assert job_ids() == []
 
 
 def test_observation_metrics_free_counters(spark):

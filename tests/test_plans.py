@@ -35,7 +35,10 @@ def corpus_path(spark, tmp_path_factory):
 
 def test_extract_pipeline_single_shuffle_and_pruned_scan(spark, corpus_path):
     df = spark.read.parquet(corpus_path)
-    spans = extract_pipeline(df, JOB)
+    # a scan that fills the cores runs without the salt exchange ...
+    assert count_exchanges(extract_pipeline(df, JOB)) == 0
+    # ... a one-partition input gets it, and nothing else
+    spans = extract_pipeline(df.coalesce(1), JOB)
     assert count_exchanges(spans) == 1  # exactly the salt repartition
     assert "MapInPandas" in executed_plan(spans)
     schemas = scan_read_schemas(spans)
@@ -201,7 +204,8 @@ def test_section_pipeline_single_shuffle(spark, corpus_path):
     from tei_chunker_spark.operators.extract import section_metadata_pipeline
 
     df = spark.read.parquet(corpus_path)
-    secs = section_metadata_pipeline(df, JOB)
+    assert count_exchanges(section_metadata_pipeline(df, JOB)) == 0
+    secs = section_metadata_pipeline(df.coalesce(1), JOB)
     assert count_exchanges(secs) == 1
     assert "MapInPandas" in executed_plan(secs)
 

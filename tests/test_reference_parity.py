@@ -6,11 +6,12 @@ the suite pins semantics via literal goldens, so this is belt-and-braces.
 from __future__ import annotations
 
 import os
-import random
 import sys
 import types
 
 import pytest
+
+from scripts.parity_check import BATTERY_CONFIGS, battery
 
 REFERENCE = "/root/reference"
 
@@ -36,14 +37,8 @@ def _load_reference():
     return HierarchicalChunker
 
 
-@pytest.mark.parametrize(
-    "max_chunk_size,overlap_size",
-    [(20000, 200), (500, 50), (100, 50), (100, 200), (80, 5), (137, 55), (1, 10)],
-)
+@pytest.mark.parametrize("max_chunk_size,overlap_size", BATTERY_CONFIGS)
 def test_randomized_parity(max_chunk_size, overlap_size):
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from scripts.parity_check import rand_doc, F1, F2, EDGE
-
     from tei_chunker_spark.config import ChunkerConfig
     from tei_chunker_spark.core import chunk_tei
 
@@ -51,8 +46,6 @@ def test_randomized_parity(max_chunk_size, overlap_size):
     ref = HierarchicalChunker(max_chunk_size=max_chunk_size, overlap_size=overlap_size)
     cfg = ChunkerConfig(max_chunk_size=max_chunk_size, overlap_size=overlap_size)
 
-    rng = random.Random(1234 + max_chunk_size * 7 + overlap_size)
-    docs = [F1, F2, *EDGE] + [rand_doc(rng) for _ in range(60)]
-    for doc in docs:
+    for doc in battery(max_chunk_size, overlap_size):
         expected = ref.chunk_document(ref.parse_grobid_xml(doc))
         assert chunk_tei(doc, cfg) == expected

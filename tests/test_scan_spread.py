@@ -17,11 +17,13 @@ TABLES = PKG / "sources" / "tables.py"
 
 # name -> (file, function) pairs allowed to use it outside tables.py:
 # the synthetic corpus spreads its generation, and the extraction salt
-# exchange is a hash repartition, not a scan spread.
+# exchange is a hash repartition, not a scan spread, that ``_salted``
+# adds only where the input does not already fill the cores.
 _ALLOWED = {
     ("__spark_entry__.py", "_interleaved_corpus", "repartition"),
     ("__spark_entry__.py", "_interleaved_corpus", "defaultParallelism"),
-    ("tei_chunker_spark/operators/extract.py", "_salted", "repartition"),
+    ("tei_chunker_spark/operators/extract.py", "salt_exchange", "repartition"),
+    ("tei_chunker_spark/operators/extract.py", "_salted", "defaultParallelism"),
 }
 _SPREAD_NAMES = {"repartition", "defaultParallelism", "getsize", "ParquetFile",
                  "read_metadata"}
@@ -74,6 +76,8 @@ def test_scan_spread_only_in_tables_module():
     src = TABLES.read_text(encoding="utf-8")
     for call in (".repartition(", "getsize(", "ParquetFile("):
         assert src.count(call) == 1, call
+    extract = (PKG / "operators" / "extract.py").read_text(encoding="utf-8")
+    assert extract.count(".repartition(") == 1
 
 
 @pytest.mark.parametrize("helper", [E._docs_with_exact_dups, E._docs_with_near_dups])
