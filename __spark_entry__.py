@@ -61,24 +61,6 @@ _FLAGSHIP_JOB = JobConfig(
     shuffle_partitions=32,
 )
 
-# For pipelines fed by _interleaved_corpus: the generator's own
-# round-robin repartition already distributes documents uniformly across
-# cluster parallelism, so the salt exchange would re-shuffle an ALREADY
-# uniformly spread corpus for nothing (guide §2.4 "remove shuffles
-# outright" — valid at any scale: round-robin IS the anti-skew
-# distribution the salt exists to approximate).  extract_pipeline cannot
-# see that itself: an input whose plan already shuffles keeps the salt
-# (reading its partition count would start a job), so this config skips
-# it.  Outputs are identical either way (assume_bucketed_input is a
-# physical-plan knob); a file scan that fills the cores skips the salt
-# under either config.
-_FLAGSHIP_JOB_PRESPREAD = JobConfig(
-    chunker=ChunkerConfig(max_chunk_size=500, overlap_size=50),
-    shuffle_partitions=32,
-    assume_bucketed_input=True,
-)
-
-
 def _interleaved_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic interleaved-span input table keyed by the driver's
     documents.doc_id (BASELINE.json input_hint shape; no external data)."""
@@ -90,6 +72,9 @@ def _interleaved_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = load(spark, sf_dir, "documents").select("doc_id")
     # Generation parallelism follows the session's core count instead of a
     # fixed constant (a fixed 16 would cap corpus synthesis on big hosts).
+    # The round-robin already spreads the documents uniformly over the
+    # cores, so extraction adds no exchange of its own: _salted reads the
+    # repartition's count from the plan and finds the cores filled.
     return ids.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
         gen, INPUT_SCHEMA_DDL
     )
@@ -97,7 +82,7 @@ def _interleaved_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline over sf0.001-derived corpus."""
-    return extract_pipeline(_interleaved_corpus(spark, "/root/testdata/sf0.001"), _FLAGSHIP_JOB_PRESPREAD)
+    return extract_pipeline(_interleaved_corpus(spark, "/root/testdata/sf0.001"), _FLAGSHIP_JOB)
 
 
 # ---------------------------------------------------------------------------
@@ -445,10 +430,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # -- extraction pipeline (rows-only: whole-doc fold, not SQL-expressible;
     #    exact semantics pinned by the pytest golden/parity suite)
     q["extract_spans_pipeline"] = lambda spark, sf: extract_pipeline(
-        _interleaved_corpus(spark, sf), _FLAGSHIP_JOB_PRESPREAD
+        _interleaved_corpus(spark, sf), _FLAGSHIP_JOB
     )
     q["extract_doc_metrics"] = lambda spark, sf: (
-        extract_pipeline(_interleaved_corpus(spark, sf), _FLAGSHIP_JOB_PRESPREAD)
+        extract_pipeline(_interleaved_corpus(spark, sf), _FLAGSHIP_JOB)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_spans"),
@@ -463,7 +448,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     )
     q["extract_sections"] = lambda spark, sf: section_metadata_pipeline(
-        _interleaved_corpus(spark, sf), _FLAGSHIP_JOB_PRESPREAD
+        _interleaved_corpus(spark, sf), _FLAGSHIP_JOB
     )
     q["media_frame_sample"] = lambda spark, sf: _cast_long(
         multimodal.media_frame_sample(

@@ -1,6 +1,7 @@
 """Iceberg end-to-end exercise: corpus -> Iceberg table (bucket(P, doc_id)
-layout) -> extraction pipeline with ``input_format='iceberg'`` +
-``assume_bucketed_input`` -> Iceberg span sink -> read-back verification.
+layout) -> extraction pipeline with ``input_format='iceberg'`` -> Iceberg
+span sink -> read-back verification.  The pipeline adds no exchange of its
+own where the table's scan already fills the cores.
 
 This is the north-rule storage path (BASELINE.json: "Iceberg table of
 interleaved documents").  The sandbox ships no iceberg-spark-runtime jar,
@@ -25,18 +26,16 @@ N_DOCS = 400
 BUCKETS = 8
 
 
-def e2e_job(buckets: int = BUCKETS, bucketed: bool = True):
-    """The exact JobConfig the e2e path runs: iceberg in/out, shuffle
-    elision on the bucket(P, doc_id) layout.  Factored out so the
-    jar-less dry-run test exercises the identical configuration."""
+def e2e_job(buckets: int = BUCKETS):
+    """The exact JobConfig the e2e path runs (iceberg input).  Factored
+    out so the jar-less dry-run test exercises the identical
+    configuration."""
     from tei_chunker_spark.config import ChunkerConfig, JobConfig
 
     return JobConfig(
         chunker=ChunkerConfig(500, 50),
         shuffle_partitions=buckets,
         input_format="iceberg",
-        output_format="iceberg",
-        assume_bucketed_input=bucketed,
     )
 
 
@@ -91,34 +90,33 @@ def find_local_iceberg_jar() -> str | None:
 
 def dry_run(spark, n_docs: int = 200) -> int:
     """Everything the e2e does EXCEPT the Iceberg catalog calls, runnable
-    with no jar: build the corpus, run the extraction pipeline in the
-    bucketed-input configuration (shuffle elision) against a salt-
-    partitioned parquet stand-in for the bucket(P, doc_id) table layout,
-    assert the elided plan really has no Exchange, and verify output
-    equality with the plain (shuffling) pipeline.  Returns the span count.
-    Catches regressions in this script's pipeline logic between rounds on
-    jar-less boxes; the subprocess e2e covers the catalog half when the
-    runtime jar is resolvable."""
+    with no jar: build the corpus, run the extraction pipeline over a
+    checkpointed stand-in for the bucket(P, doc_id) table layout, assert
+    that its plan has no Exchange (the stand-in's P partitions already
+    fill min(P, cores)), and verify output equality with the pipeline over
+    the corpus as generated.  Returns the span count.  Catches regressions
+    in this script's pipeline logic between rounds on jar-less boxes; the
+    subprocess e2e covers the catalog half when the runtime jar is
+    resolvable."""
     from tei_chunker_spark.config import ChunkerConfig, JobConfig
     from tei_chunker_spark.corpus import corpus_df
-    from tei_chunker_spark.operators.extract import extract_pipeline, salt_column
+    from tei_chunker_spark.operators.extract import extract_pipeline
 
     job_ice = e2e_job(BUCKETS)
-    # Stand-in for the Iceberg bucket(P, doc_id) layout: pre-partition on
-    # the same salt so assume_bucketed_input's alignment premise holds.
-    # Materialized eagerly so the stand-in's own repartition is not part of
-    # the plan under inspection (on a real cluster the layout lives in the
-    # table, not the query).
+    # Stand-in for the Iceberg bucket(P, doc_id) layout.  Materialized
+    # eagerly so the stand-in's own repartition is not part of the plan
+    # under inspection (on a real cluster the layout lives in the table,
+    # not the query).
     docs = (
         corpus_df(spark, n_docs)
-        .repartition(BUCKETS, salt_column(BUCKETS))
+        .repartition(BUCKETS, "doc_id")
         .localCheckpoint(eager=True)
     )
-    # Format knobs steer the scan/sink only; the pipeline between them is
-    # what we exercise here (parquet stand-ins for both ends).
+    # input_format steers the scan only; the pipeline after it is what we
+    # exercise here.
     elided = extract_pipeline(docs, job_ice)
     plan = elided._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, f"bucketed-input path still shuffles:\n{plan}"
+    assert "Exchange" not in plan, f"bucketed input still shuffles:\n{plan}"
     plain = extract_pipeline(
         corpus_df(spark, n_docs),
         JobConfig(chunker=ChunkerConfig(500, 50), shuffle_partitions=BUCKETS),
@@ -166,8 +164,8 @@ def main(warehouse: str) -> int:
     job = e2e_job(BUCKETS)
 
     # 1. Write the interleaved corpus as an Iceberg table bucketed on
-    #    doc_id — the 10^12-doc layout that lets the pipeline elide its
-    #    shuffle (config.assume_bucketed_input).
+    #    doc_id — the 10^12-doc layout whose scan fills the cores, so the
+    #    pipeline adds no exchange (operators/extract._salted).
     docs = corpus_df(spark, N_DOCS)
     spark.sql("DROP TABLE IF EXISTS local.db.documents")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS local.db")

@@ -4,7 +4,7 @@ A from-scratch, Spark-first re-expression of the computational semantics of
 dmarx/tei-chunker (GROBID TEI XML -> hierarchical chunks), built as a
 DataFrame pipeline over tables of interleaved text+media documents:
 Scan -> Project -> MapInPandas -> Sink, one stage when the scan's byte-sized
-splits already fill the cores, with a salted Exchange before MapInPandas
+splits already fill the cores, with a doc_id Exchange before MapInPandas
 otherwise; a checkpoint manifest gives resume and per-partition
 lineage/metrics.
 """

@@ -35,31 +35,17 @@ class ChunkerConfig:
 class JobConfig:
     """Execution knobs. Changing these must NOT change outputs.
 
-    Two keys come from the same hash.  The shuffle salt is
-    pmod(xxhash64(doc_id), shuffle_partitions); the manifest bucket, the
-    checkpoint/resume granularity, is pmod(xxhash64(doc_id), num_buckets).
-    They align only when one count divides the other: if num_buckets
-    divides shuffle_partitions, every shuffle partition holds rows of one
-    bucket; if shuffle_partitions divides num_buckets, every bucket lands
-    whole in one shuffle partition.  At 100 TB / 10^12 docs you would
-    raise num_buckets into the thousands so a resume skips completed work
-    at fine granularity; locally small values keep test jobs fast.
+    ``shuffle_partitions`` (P) is the width of each exchange the job adds:
+    the extraction spread, where an input cannot fill the cores itself
+    (``operators/extract._salted``), and the resumable runner's salt
+    exchange per wave.  ``num_buckets`` is the checkpoint/resume
+    granularity (``manifest.bucket_column``).  At 100 TB / 10^12 docs you
+    would raise num_buckets into the thousands so a resume skips
+    completed work at fine granularity; locally small values keep test
+    jobs fast.
     """
 
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)
     num_buckets: int = 16
     shuffle_partitions: int = 64
-    # Rows are whole documents, so Arrow batches stay modest to bound
-    # Python-worker memory against the oversized-doc tail; 256 measured
-    # fastest (64 pays per-batch pandas overhead, 1024 is GC-erratic).
-    arrow_max_records_per_batch: int = 256
     input_format: str = "parquet"  # "iceberg" on a real cluster
-    output_format: str = "parquet"
-    # The extraction pipeline adds the salt repartition only where the
-    # input cannot fill the cores itself (operators/extract._salted): too
-    # few partitions, a streaming source, or a plan that already shuffles.
-    # Set True to skip it for those inputs too: a table already bucketed
-    # by pmod(xxhash64(doc_id), P) (Iceberg `bucket(P, doc_id)`), or an
-    # input already spread by its own exchange.  Outputs are identical
-    # either way (pinned by tests); this is purely a physical-plan decision.
-    assume_bucketed_input: bool = False

@@ -88,10 +88,7 @@ def main(argv=None) -> None:
 
     job = build_job_config(args)
     spark = get_spark(
-        "tei-extract",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-        arrow_batch=job.arrow_max_records_per_batch,
+        "tei-extract", master=args.master, shuffle_partitions=args.shuffle_partitions
     )
 
     if not args.manifest:

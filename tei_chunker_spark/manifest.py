@@ -5,8 +5,9 @@ response, reference service.py:32-55); at 10^12 documents the job must
 instead survive restarts.  Design:
 
 * every document maps to a stable **bucket** = ``pmod(xxhash64(doc_id),
-  num_buckets)`` — the same salt family used by the shuffle, so resume
-  granularity aligns with the physical partitioning.
+  num_buckets)``, the same hash as each wave's salt exchange
+  (:func:`salt_exchange`), so resume granularity aligns with the
+  physical partitioning.
 * output is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-processing a bucket is idempotent (no dupes).
 * the manifest is an append-only table ``(job_id, bucket, status,
@@ -25,14 +26,13 @@ from __future__ import annotations
 
 import json
 import time
-from dataclasses import replace
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
-from .operators.extract import extract_pipeline, salt_column, salt_exchange
+from .operators.extract import extract_pipeline
 
 MANIFEST_SCHEMA_DDL = (
     "job_id string, bucket int, status string, input_doc_count long, "
@@ -40,8 +40,28 @@ MANIFEST_SCHEMA_DDL = (
 )
 
 
+def salt_column(num_partitions: int) -> Column:
+    """Salt bucket for shuffle + checkpoint granularity."""
+    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int")
+
+
 def bucket_column(num_buckets: int):
     return salt_column(num_buckets).alias("bucket")
+
+
+def salt_exchange(df: DataFrame, num_partitions: int) -> DataFrame:
+    """A wave's bucket-aligned exchange: ``df`` hash-repartitioned into
+    ``num_partitions`` (P) partitions on the salt ``pmod(xxhash64(doc_id),
+    P)``, so each salt value lands whole in one partition.  The bucket is
+    the same hash modulo num_buckets, so when num_buckets divides P each
+    bucket's rows land in at most P / num_buckets partitions, and its
+    output directory gets at most that many files (one partition may
+    still hold rows of several buckets)."""
+    return (
+        df.withColumn("_salt", salt_column(num_partitions))
+        .repartition(num_partitions, "_salt")
+        .drop("_salt")
+    )
 
 
 def read_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
@@ -96,10 +116,6 @@ def run_resumable(
     if not pending:
         return
 
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(job.arrow_max_records_per_batch),
-    )
     input_df = spark.read.format(job.input_format).load(input_path).withColumn(
         "bucket", bucket_column(nb)
     )
@@ -125,26 +141,19 @@ def run_resumable(
             r["bucket"]: r["n"]
             for r in subset.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        # Salted here whatever the scan's partition count: a bucket
-        # directory then gets files only from the partitions holding its
-        # salts (at most P / num_buckets when num_buckets divides P), not
-        # one from every scan task.
-        docs = subset.select("doc_id", "spans")
-        if not job.assume_bucketed_input:
-            docs = salt_exchange(docs, job.shuffle_partitions)
-        spans = extract_pipeline(
-            docs, replace(job, assume_bucketed_input=True)
-        ).withColumn("bucket", salt_column(nb))
-        spans.write.mode("overwrite").partitionBy("bucket").format(
-            job.output_format
-        ).save(output_path)
+        # Salted here whatever the scan's partition count, so a bucket
+        # directory gets files only from the partitions holding its salts;
+        # extract_pipeline then adds no exchange of its own.
+        docs = salt_exchange(subset.select("doc_id", "spans"), job.shuffle_partitions)
+        spans = extract_pipeline(docs, job).withColumn("bucket", salt_column(nb))
+        spans.write.mode("overwrite").partitionBy("bucket").format("parquet").save(
+            output_path
+        )
         wall_ms = int((time.time() - t0) * 1000)
 
         # Metrics from the committed files (no re-extraction): narrow
         # columnar scan of just-written buckets.
-        written = spark.read.format(job.output_format).load(output_path).filter(
-            F.col("bucket").isin(wave)
-        )
+        written = spark.read.parquet(output_path).filter(F.col("bucket").isin(wave))
         stats = {
             r["bucket"]: r
             for r in written.groupBy("bucket")

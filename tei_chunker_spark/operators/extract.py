@@ -2,18 +2,16 @@
 
 Physical plan (see SURVEY.md §4.3):
 
-    Scan -> Project(doc_id, spans) -> [Exchange(hash(salt), P)] ->
+    Scan -> Project(doc_id, spans) -> [Exchange(hash(doc_id), P)] ->
     MapInPandas(extract) -> Sink
 
-``_salted`` adds the exchange, on the salt ``pmod(xxhash64(doc_id), P)``
-(P = shuffle_partitions), only where the input cannot fill the cores
-itself.  Over a file scan with enough splits the pipeline is one stage:
-byte-sized splits bound each task's cost.  Small Arrow batches bound how
-long one straggler document can hold a batch (AQE cannot see inside the
-Python stage, so this must be explicit; SURVEY.md §4.2).  The manifest's
-checkpoint/resume bucket is the same hash modulo num_buckets
-(``manifest.bucket_column``), a different key: see JobConfig for when the
-two align.
+``_salted`` adds the exchange (P = shuffle_partitions) only where the
+input cannot fill the cores itself, and reads that from the input's plan
+without starting a job.  Over a file scan with enough splits the pipeline
+is one stage: byte-sized splits bound each task's cost.  Small Arrow
+batches bound how long one straggler document can hold a batch (AQE
+cannot see inside the Python stage, so this must be explicit; SURVEY.md
+§4.2).
 
 The Python stage is the sanctioned vectorized path: data crosses the
 JVM<->Python boundary in columnar Arrow batches via ``mapInPandas``; the
@@ -29,9 +27,8 @@ from typing import Iterable, Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import ChunkerConfig, JobConfig
+from ..config import JobConfig
 from ..core import chunk_tei, section_meta
-from ..plans.explain import executed_plan
 
 SPAN_SCHEMA_DDL = "doc_id string, offset int, kind string, text string, media_ref string"
 SECTION_SCHEMA_DDL = (
@@ -92,102 +89,100 @@ def _capped(parse, cap: int | None):
     return lambda xml: [] if len(xml) > cap else parse(xml)
 
 
-def make_batch_extractor(cfg: ChunkerConfig):
-    """Arrow-batch extraction fn for ``mapInPandas`` (1 doc row -> N span rows).
+def _partitions(df: DataFrame) -> int:
+    """``df``'s partition count, read from its plan without starting a
+    job; 0 where only a job could read it.
 
-    Input batches carry (doc_id, xml, media) from :func:`reassembled`; the
-    whole-document fold (reference chunking.py:185-265) runs per row, text
-    chunks first, then media passthrough spans — identical observable
-    output to core.extract_spans (pinned by tests/test_pipeline.py)."""
-    chunk = _capped(partial(chunk_tei, cfg=cfg), cfg.max_doc_chars)
-
-    def extract_batches(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            doc_ids, offsets, kinds, texts, refs = [], [], [], [], []
-            for doc_id, xml, media in zip(pdf["doc_id"], pdf["xml"], pdf["media"]):
-                offset = 0
-                for text in chunk(xml):
-                    doc_ids.append(doc_id)
-                    offsets.append(offset)
-                    kinds.append("text")
-                    texts.append(text)
-                    refs.append(None)
-                    offset += 1
-                for ref in media:
-                    doc_ids.append(doc_id)
-                    offsets.append(offset)
-                    kinds.append("media_ref")
-                    texts.append(None)
-                    refs.append(ref)
-                    offset += 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "offset": pd.array(offsets, dtype="int32"),
-                    "kind": kinds,
-                    "text": texts,
-                    "media_ref": refs,
-                }
-            )
-
-    return extract_batches
-
-
-def salt_column(num_partitions: int, col: str = "doc_id") -> Column:
-    """Salt bucket for shuffle + checkpoint granularity."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
-
-
-def salt_exchange(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Hash exchange of ``df`` into ``num_partitions`` partitions on the
-    doc_id salt; each salt value lands whole in one partition."""
-    return (
-        df.withColumn("_salt", salt_column(num_partitions))
-        .repartition(num_partitions, "_salt")
-        .drop("_salt")
-    )
+    Under adaptive execution a plan with an exchange or a subquery is an
+    AdaptiveSparkPlan, whose input plan gives the count the query starts
+    with: N after a round-robin or hash repartition(N), 0 (unknown) after
+    an aggregate, a union or a subquery.  Without adaptive execution,
+    building the RDD of such a plan would run its broadcast or subquery
+    job, so it reads 0.  Any other plan (a file scan, whose partitioning
+    is unknown until its splits are listed) builds its RDD, which runs no
+    job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return plan.inputPlan().outputPartitioning().numPartitions()
+    text = plan.toString()
+    if "Exchange" in text or "Subquery" in text:
+        return 0
+    return df.rdd.getNumPartitions()
 
 
 def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
     """The shared head of every extraction-family pipeline, and the one
     place that decides whether its input needs spreading.
 
-    An input that already has at least min(P, defaultParallelism)
-    partitions, none of them behind a shuffle, runs scan -> reassembly ->
-    Python in one stage: an exchange there adds no concurrency, only a
-    full copy of the input and P Python tasks in place of the scan's
-    (each task pays a fixed boundary cost).  A file scan is the usual
-    case; its byte-sized splits bound each task's cost as the salt would.
-    Every other input gets :func:`salt_exchange`, and reassembly runs in
-    the P-way stage after it: streaming inputs, inputs with fewer
-    partitions, and inputs whose plan already has an exchange or a
-    subquery (reading their partition count would start a job).
-    ``assume_bucketed_input`` (an Iceberg bucket(P, doc_id) layout, or a
-    caller that salted the input itself) skips the exchange always."""
+    A batch input with at least min(P, defaultParallelism) partitions
+    (:func:`_partitions`) runs reassembly and Python in its own last
+    stage: an exchange there adds no concurrency, only a full copy of the
+    input and P Python tasks in place of its own (each task pays a fixed
+    boundary cost).  A file scan with enough splits, a round-robin
+    repartition to the core count and the resumable runner's salted waves
+    are such inputs.  Every other input (streaming, too few partitions, or
+    a count only a job could read) is hash-repartitioned on doc_id into
+    P = shuffle_partitions partitions, and reassembly runs in the P-way
+    stage after it."""
     df = df.select("doc_id", "spans")
-    if job.assume_bucketed_input:
-        return df
     p = job.shuffle_partitions
-    if not df.isStreaming:
-        plan = executed_plan(df)
-        if "Exchange" not in plan and "Subquery" not in plan:
-            cores = df.sparkSession.sparkContext.defaultParallelism
-            if df.rdd.getNumPartitions() >= min(p, cores):
-                return df
-    return salt_exchange(df, p)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if df.isStreaming or _partitions(df) < min(p, cores):
+        return df.repartition(p, "doc_id")
+    return df
+
+
+def _per_document(df: DataFrame, job: JobConfig, inputs, fold, schema: str) -> DataFrame:
+    """The one Python stage of the extraction family: :func:`_salted` ->
+    :func:`reassembled` -> (doc_id, *inputs) -> ``mapInPandas``.
+
+    ``fold(doc_id, *inputs)`` yields one document's output rows as tuples
+    in ``schema`` order.  Each Arrow batch's rows are transposed into
+    column lists, ``int`` columns as int32.  Selecting only ``inputs``
+    lets Catalyst prune what the fold never reads out of the plan and off
+    the Arrow wire."""
+    fields = [f.split() for f in schema.split(", ")]
+
+    def batches(pdfs: Iterable) -> Iterator:
+        import pandas as pd
+
+        for pdf in pdfs:
+            docs = zip(pdf["doc_id"], *(pdf[c] for c in inputs))
+            cols = list(zip(*[row for doc in docs for row in fold(*doc)]))
+            yield pd.DataFrame(
+                {
+                    name: pd.array(col, dtype="int32") if kind == "int" else col
+                    for (name, kind), col in zip(fields, cols or [()] * len(fields))
+                }
+            )
+
+    return (
+        reassembled(_salted(df, job))
+        .select("doc_id", *inputs)
+        .mapInPandas(batches, schema)
+    )
 
 
 def extract_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     """documents(doc_id, spans) -> spans_out(doc_id, offset, kind, text, media_ref).
 
-    Output row order within a document is the semantic ``offset``; global
-    order is undefined (it's a distributed table — verification sorts).
+    The whole-document fold (reference chunking.py:185-265) runs per
+    document, text chunks first, then media passthrough spans: identical
+    observable output to core.extract_spans (pinned by
+    tests/test_pipeline.py).  Output row order within a document is the
+    semantic ``offset``; global order is undefined (it's a distributed
+    table — verification sorts).
     """
-    return reassembled(_salted(df, job)).mapInPandas(
-        make_batch_extractor(job.chunker), SPAN_SCHEMA_DDL
-    )
+    chunk = _capped(partial(chunk_tei, cfg=job.chunker), job.chunker.max_doc_chars)
+
+    def spans(doc_id, xml, media):
+        texts = chunk(xml)
+        for offset, text in enumerate(texts):
+            yield doc_id, offset, "text", text, None
+        for offset, ref in enumerate(media, len(texts)):
+            yield doc_id, offset, "media_ref", None, ref
+
+    return _per_document(df, job, ("xml", "media"), spans, SPAN_SCHEMA_DDL)
 
 
 def media_ref_pipeline(df: DataFrame) -> DataFrame:
@@ -215,39 +210,9 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     array (reference service.py:37-44): one output row per top-level
     section — (doc_id, section_idx, title, level, length,
     subsection_count), length = direct content only.  Same physical shape
-    as extract_pipeline: scan -> [salt exchange] -> mapInPandas."""
-    salted = _salted(df, job)
+    as extract_pipeline, without the media column."""
     meta = _capped(section_meta, job.chunker.max_doc_chars)
-
-    def meta_batches(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            doc_ids, idxs, titles, levels, lengths, counts = [], [], [], [], [], []
-            for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                for i, title, level, length, n_subs in meta(xml):
-                    doc_ids.append(doc_id)
-                    idxs.append(i)
-                    titles.append(title)
-                    levels.append(level)
-                    lengths.append(length)
-                    counts.append(n_subs)
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "section_idx": pd.array(idxs, dtype="int32"),
-                    "title": titles,
-                    "level": pd.array(levels, dtype="int32"),
-                    "length": pd.array(lengths, dtype="int32"),
-                    "subsection_count": pd.array(counts, dtype="int32"),
-                }
-            )
-
-    # select() before the Python stage: the section walk never reads the
-    # media array, and the projection lets Catalyst prune the media
-    # filter/transform out of the plan AND off the Arrow wire.
-    return (
-        reassembled(salted)
-        .select("doc_id", "xml")
-        .mapInPandas(meta_batches, SECTION_SCHEMA_DDL)
+    return _per_document(
+        df, job, ("xml",), lambda doc_id, xml: ((doc_id, *m) for m in meta(xml)),
+        SECTION_SCHEMA_DDL,
     )

@@ -3,7 +3,7 @@
 The north rule is a batch `spark-submit` job with manifest-based resume
 (SURVEY.md §3.4) — streaming is an *alternative* integration, not the
 primary path.  :func:`extract_stream` runs the same extraction
-pipeline under ``Trigger.AvailableNow``, with the salt exchange (a
+pipeline under ``Trigger.AvailableNow``, with the spread exchange (a
 streaming input always gets it): the file-source checkpoint gives
 exactly-once, per-micro-batch resumability for free (kill it mid-corpus,
 restart, no dupes/no gaps — the streaming analogue of the manifest).  On

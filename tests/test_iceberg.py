@@ -3,8 +3,9 @@
 getOrCreate session) and skips when the iceberg-spark runtime jar is
 absent, which is the documented state of this sandbox.  On a cluster with
 the jar present the same test exercises: corpus -> Iceberg table with
-bucket(P, doc_id) layout -> input_format='iceberg' scan with the bucketed
-shuffle elision -> Iceberg span sink -> exact read-back comparison."""
+bucket(P, doc_id) layout -> input_format='iceberg' scan, which fills the
+cores so the pipeline adds no exchange -> Iceberg span sink -> exact
+read-back comparison."""
 from __future__ import annotations
 
 import os
@@ -17,12 +18,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_iceberg_dry_run_plan_path(spark):
-    """Jar-less coverage of scripts/iceberg_e2e.py's pipeline logic: the
-    bucketed-input (shuffle-elided) configuration must produce a
-    zero-Exchange plan and output identical to the shuffling pipeline on a
-    salt-partitioned stand-in for the bucket(P, doc_id) Iceberg layout.
-    Catches regressions in the e2e script between rounds even while the
-    catalog half stays jar-gated."""
+    """Jar-less coverage of scripts/iceberg_e2e.py's pipeline logic: over a
+    P-partition stand-in for the bucket(P, doc_id) Iceberg layout the
+    pipeline must have a zero-Exchange plan, under the default spread
+    rule, and give output identical to the pipeline over the corpus as
+    generated.  Catches regressions in the e2e script between rounds even
+    while the catalog half stays jar-gated."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     import iceberg_e2e
 

@@ -126,28 +126,47 @@ def test_oversized_doc_guardrail(spark):
             assert all(k == "media_ref" for k, _t, _m in capped.get(d, []))
 
 
-def test_bucketed_input_elides_shuffle_same_output(spark):
-    """assume_bucketed_input drops the salt exchange even where the rule
-    would add one (a repartitioned input); rows are identical."""
+def test_spread_rule_reads_the_input_partition_count(spark):
+    """An input already spread by its own repartition(defaultParallelism)
+    gets no second exchange; a repartition(2) input and a groupBy input
+    (whose count only a job could read) each get exactly one spread; all
+    three give the same rows.  Each of the three runs one exchange: the
+    spread replaces the repartition(2), and Spark drops it after the
+    groupBy, whose own exchange already hashes doc_id into P partitions."""
+    from pyspark.sql import functions as F
+
     from tei_chunker_spark.plans.explain import count_exchanges
 
-    rows = make_rows([f"bk{i}" for i in range(40)])
-    df = _input_df(spark, rows).repartition(4)
-    bucketed_job = JobConfig(
-        chunker=JOB.chunker, shuffle_partitions=8, assume_bucketed_input=True
+    df = _input_df(spark, make_rows([f"bk{i}" for i in range(40)]))
+    spread = extract_pipeline(df.repartition(spark.sparkContext.defaultParallelism), JOB)
+    narrow = extract_pipeline(df.repartition(2), JOB)
+    grouped = extract_pipeline(
+        df.groupBy("doc_id").agg(F.first("spans").alias("spans")), JOB
     )
-    with_shuffle = extract_pipeline(df, JOB)
-    without = extract_pipeline(df, bucketed_job)
-    # repartition(4) itself is one exchange; only the first adds the salt
-    assert count_exchanges(with_shuffle) == 2
-    assert count_exchanges(without) == 1
-    assert _collect_by_doc(with_shuffle) == _collect_by_doc(without)
+    for out, spreads in ((spread, 0), (narrow, 1), (grouped, 1)):
+        assert count_exchanges(out) == 1 and _spread_repartitions(out) == spreads
+    expected = _collect_by_doc(spread)
+    assert expected and _collect_by_doc(narrow) == expected
+    assert _collect_by_doc(grouped) == expected
+
+
+def test_spread_fills_every_partition(spark):
+    """The spread hashes doc_id once, so 400 documents from one partition
+    fill all P partitions of its output (a second hash of a salt already
+    reduced mod P left 3 of 8 empty)."""
+    from pyspark.sql import functions as F
+
+    from tei_chunker_spark.operators.extract import _salted
+
+    df = _input_df(spark, make_rows([f"s{i}" for i in range(400)])).coalesce(1)
+    parts = _salted(df, JOB).select(F.spark_partition_id()).distinct().count()
+    assert parts == JOB.shuffle_partitions
 
 
 def test_salting_distribution(spark):
     """The salt spreads documents near-uniformly across buckets so no
     partition inherits a disproportionate share (the skew defense)."""
-    from tei_chunker_spark.operators.extract import salt_column
+    from tei_chunker_spark.manifest import salt_column
 
     rows = make_rows([f"s{i}" for i in range(400)])
     df = _input_df(spark, rows)
@@ -162,18 +181,18 @@ def test_salting_distribution(spark):
     assert max(counts) < 3 * min(counts)  # no gross imbalance at n=400
 
 
-def _salt_repartitions(df) -> int:
-    """Salt exchanges in ``df``'s analyzed plan, which a streaming frame
-    has before it runs."""
+def _spread_repartitions(df) -> int:
+    """Extraction spreads (hash repartitions on doc_id) in ``df``'s
+    analyzed plan, which a streaming frame has before it runs."""
     return df._jdf.queryExecution().analyzed().toString().count(
-        "RepartitionByExpression [_salt"
+        "RepartitionByExpression [doc_id"
     )
 
 
 def test_spread_input_runs_in_the_scan_stage(spark, tmp_path):
     """An input that fills the cores gets no exchange; one with a single
-    partition and a streaming one each get exactly one salt exchange; all
-    three give the same rows."""
+    partition and a streaming one each get exactly one spread; all three
+    give the same rows."""
     from pyspark.sql import functions as F
 
     from tei_chunker_spark.plans.explain import count_exchanges, executed_plan
@@ -188,14 +207,14 @@ def test_spread_input_runs_in_the_scan_stage(spark, tmp_path):
     assert count_exchanges(spread) == 0 and "MapInPandas" in plan
     assert "extra_col" not in plan
     single = extract_pipeline(df.coalesce(1), JOB)
-    assert count_exchanges(single) == 1 and _salt_repartitions(single) == 1
+    assert count_exchanges(single) == 1 and _spread_repartitions(single) == 1
 
     path = str(tmp_path / "input")
     _input_df(spark, rows).write.parquet(path)
     stream = extract_pipeline(
         spark.readStream.schema(INPUT_SCHEMA_DDL).parquet(path), JOB
     )
-    assert _salt_repartitions(stream) == 1
+    assert _spread_repartitions(stream) == 1
     q = (
         stream.writeStream.format("memory")
         .queryName("spread_rule_stream")
@@ -214,10 +233,13 @@ def test_spread_input_runs_in_the_scan_stage(spark, tmp_path):
 
 
 def test_building_the_pipeline_starts_no_job(spark, tmp_path):
-    """The spread rule reads partition counts only where that runs no
-    job: a file scan (no exchange in its plan) and the generator-fed
-    corpus (an exchange in its plan, so the salt is kept unread)."""
+    """The spread rule reads every input's partition count without a
+    job: a file scan, the generator-fed corpus (its round-robin fills the
+    cores, so its one exchange is its own), a scalar-subquery filter, and
+    a repartition with adaptive execution off."""
     import __spark_entry__ as E
+
+    from pyspark.sql import functions as F
 
     from tei_chunker_spark.plans.explain import count_exchanges
 
@@ -231,10 +253,19 @@ def test_building_the_pipeline_starts_no_job(spark, tmp_path):
     # schema inference runs a job, so both reads come before the block
     scan = spark.read.parquet(path)
     corpus = E._interleaved_corpus(spark, str(tmp_path))
+    first_id = scan.select(F.min("doc_id")).scalar()
     with _job_ids(spark, "test-extract-build") as job_ids:
         assert count_exchanges(extract_pipeline(scan, JOB)) == 0
-        extract_pipeline(corpus, E._FLAGSHIP_JOB)
-        extract_pipeline(corpus, E._FLAGSHIP_JOB_PRESPREAD)
+        assert count_exchanges(extract_pipeline(corpus, E._FLAGSHIP_JOB)) == 1
+        subquery = extract_pipeline(scan.filter(F.col("doc_id") != first_id), JOB)
+        assert _spread_repartitions(subquery) == 1
+        aqe = "spark.sql.adaptive.enabled"
+        was = spark.conf.get(aqe)
+        spark.conf.set(aqe, "false")
+        try:
+            assert _spread_repartitions(extract_pipeline(scan.repartition(4), JOB)) == 1
+        finally:
+            spark.conf.set(aqe, was)
         assert job_ids() == []
 
 

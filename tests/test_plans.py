@@ -35,11 +35,11 @@ def corpus_path(spark, tmp_path_factory):
 
 def test_extract_pipeline_single_shuffle_and_pruned_scan(spark, corpus_path):
     df = spark.read.parquet(corpus_path)
-    # a scan that fills the cores runs without the salt exchange ...
+    # a scan that fills the cores runs without the spread exchange ...
     assert count_exchanges(extract_pipeline(df, JOB)) == 0
     # ... a one-partition input gets it, and nothing else
     spans = extract_pipeline(df.coalesce(1), JOB)
-    assert count_exchanges(spans) == 1  # exactly the salt repartition
+    assert count_exchanges(spans) == 1  # exactly the spread repartition
     assert "MapInPandas" in executed_plan(spans)
     schemas = scan_read_schemas(spans)
     assert schemas, "no scan found"

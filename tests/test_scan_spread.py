@@ -16,14 +16,16 @@ PKG = REPO / "tei_chunker_spark"
 TABLES = PKG / "sources" / "tables.py"
 
 # name -> (file, function) pairs allowed to use it outside tables.py:
-# the synthetic corpus spreads its generation, and the extraction salt
-# exchange is a hash repartition, not a scan spread, that ``_salted``
-# adds only where the input does not already fill the cores.
+# the synthetic corpus spreads its generation; the extraction spread is a
+# hash repartition on doc_id, not a scan spread, that ``_salted`` adds
+# only where the input does not already fill the cores; and each
+# resumable wave gets its bucket-aligned salt exchange.
 _ALLOWED = {
     ("__spark_entry__.py", "_interleaved_corpus", "repartition"),
     ("__spark_entry__.py", "_interleaved_corpus", "defaultParallelism"),
-    ("tei_chunker_spark/operators/extract.py", "salt_exchange", "repartition"),
+    ("tei_chunker_spark/operators/extract.py", "_salted", "repartition"),
     ("tei_chunker_spark/operators/extract.py", "_salted", "defaultParallelism"),
+    ("tei_chunker_spark/manifest.py", "salt_exchange", "repartition"),
 }
 _SPREAD_NAMES = {"repartition", "defaultParallelism", "getsize", "ParquetFile",
                  "read_metadata"}
