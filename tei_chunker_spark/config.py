@@ -35,14 +35,13 @@ class ChunkerConfig:
 class JobConfig:
     """Execution knobs. Changing these must NOT change outputs.
 
-    ``shuffle_partitions`` (P) is the width of each exchange the job adds:
-    the extraction spread, where an input cannot fill the cores itself
-    (``operators/extract._salted``), and the resumable runner's salt
-    exchange per wave.  ``num_buckets`` is the checkpoint/resume
-    granularity (``manifest.bucket_column``).  At 100 TB / 10^12 docs you
-    would raise num_buckets into the thousands so a resume skips
-    completed work at fine granularity; locally small values keep test
-    jobs fast.
+    ``shuffle_partitions`` (P) is the width of the job's one exchange, the
+    doc_id spread (``operators/extract.spread``) of each resumable wave and
+    of an input that cannot fill the cores.  ``num_buckets`` is the resume
+    granularity (``operators/extract.bucket_of``, the spread's own hash):
+    if it divides P, each shuffle partition of a wave holds one bucket.
+    At 10^12 docs raise it into the thousands so a resume skips completed
+    work at fine granularity; locally small values keep test jobs fast.
     """
 
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)

@@ -4,10 +4,10 @@ The reference has no persistence at all (its "sink" is one JSON HTTP
 response, reference service.py:32-55); at 10^12 documents the job must
 instead survive restarts.  Design:
 
-* every document maps to a stable **bucket** = ``pmod(xxhash64(doc_id),
-  num_buckets)``, the same hash as each wave's salt exchange
-  (:func:`salt_exchange`), so resume granularity aligns with the
-  physical partitioning.
+* every document maps to a stable **bucket** = ``pmod(hash(doc_id),
+  num_buckets)`` (``operators.extract.bucket_of``): its partition in each
+  wave's doc_id spread, mod num_buckets.  Every manifest row records this
+  layout, and a resume under another one is refused.
 * output is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-processing a bucket is idempotent (no dupes).
 * the manifest is an append-only table ``(job_id, bucket, status,
@@ -28,40 +28,16 @@ import json
 import time
 from typing import List, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
-from .operators.extract import extract_pipeline
+from .operators.extract import bucket_of, extract_pipeline, spread
 
 MANIFEST_SCHEMA_DDL = (
     "job_id string, bucket int, status string, input_doc_count long, "
     "doc_count long, span_count long, wall_ms long, attempt int, lineage_json string"
 )
-
-
-def salt_column(num_partitions: int) -> Column:
-    """Salt bucket for shuffle + checkpoint granularity."""
-    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int")
-
-
-def bucket_column(num_buckets: int):
-    return salt_column(num_buckets).alias("bucket")
-
-
-def salt_exchange(df: DataFrame, num_partitions: int) -> DataFrame:
-    """A wave's bucket-aligned exchange: ``df`` hash-repartitioned into
-    ``num_partitions`` (P) partitions on the salt ``pmod(xxhash64(doc_id),
-    P)``, so each salt value lands whole in one partition.  The bucket is
-    the same hash modulo num_buckets, so when num_buckets divides P each
-    bucket's rows land in at most P / num_buckets partitions, and its
-    output directory gets at most that many files (one partition may
-    still hold rows of several buckets)."""
-    return (
-        df.withColumn("_salt", salt_column(num_partitions))
-        .repartition(num_partitions, "_salt")
-        .drop("_salt")
-    )
 
 
 def read_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
@@ -71,17 +47,26 @@ def read_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
         return None  # first run: no manifest yet
 
 
-def completed_buckets(spark: SparkSession, path: str, job_id: str) -> List[int]:
-    """Buckets whose latest attempt is 'done'."""
+def _job_buckets(spark: SparkSession, path: str, job_id: str) -> list:
+    """Per bucket of ``job_id``, in one action: its latest ``status``, its
+    highest ``attempt`` and the bucket ``layouts`` its rows record."""
     m = read_manifest(spark, path)
     if m is None:
         return []
-    latest = (
+    layout = F.coalesce(F.get_json_object("lineage_json", "$.bucket"), F.lit("none"))
+    return (
         m.filter(F.col("job_id") == job_id)
         .groupBy("bucket")
-        .agg(F.max_by("status", "attempt").alias("status"))
+        .agg(F.max_by("status", "attempt").alias("status"),
+             F.max("attempt").alias("attempt"),
+             F.collect_set(layout).alias("layouts"))
+        .collect()
     )
-    return [r.bucket for r in latest.filter(F.col("status") == "done").collect()]
+
+
+def completed_buckets(spark: SparkSession, path: str, job_id: str) -> List[int]:
+    """Buckets whose latest attempt is 'done'."""
+    return [r.bucket for r in _job_buckets(spark, path, job_id) if r.status == "done"]
 
 
 def append_manifest(spark: SparkSession, path: str, rows: Sequence[dict]) -> None:
@@ -108,27 +93,29 @@ def run_resumable(
     cross-contaminate metrics and clobber each other's partitions.
 
     ``fail_after_waves`` injects a crash after N waves (tests only).
+    Raises ``ValueError``, before any write, if ``job_id`` has manifest
+    rows under another bucket layout: their bucket ids name other docs.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     nb = job.num_buckets
-    done = set(completed_buckets(spark, manifest_path, job_id))
+    layout = f"pmod(hash(doc_id), {nb})"
+    state = _job_buckets(spark, manifest_path, job_id)
+    other = sorted({l for r in state for l in r.layouts} - {layout})
+    if other:
+        raise ValueError(f"job {job_id!r}: the manifest records bucket layout "
+                         f"{', '.join(other)}, this run has {layout}; use a new job_id")
+    done = {r.bucket for r in state if r.status == "done"}
     pending = [b for b in range(nb) if b not in done]
     if not pending:
         return
 
     input_df = spark.read.format(job.input_format).load(input_path).withColumn(
-        "bucket", bucket_column(nb)
+        "bucket", bucket_of(nb)
     )
     # Monotonic per-job attempt number (NOT wall-clock derived: an epoch
     # modulo would wrap and make max_by('status','attempt') resolve a stale
     # row as latest).
-    m = read_manifest(spark, manifest_path)
-    attempt = 1
-    if m is not None:
-        prev = (
-            m.filter(F.col("job_id") == job_id).agg(F.max("attempt")).collect()[0][0]
-        )
-        attempt = (prev or 0) + 1
+    attempt = max((r.attempt for r in state), default=0) + 1
 
     for wave_idx in range(0, len(pending), wave_size):
         wave = pending[wave_idx : wave_idx + wave_size]
@@ -141,11 +128,11 @@ def run_resumable(
             r["bucket"]: r["n"]
             for r in subset.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        # Salted here whatever the scan's partition count, so a bucket
-        # directory gets files only from the partitions holding its salts;
-        # extract_pipeline then adds no exchange of its own.
-        docs = salt_exchange(subset.select("doc_id", "spans"), job.shuffle_partitions)
-        spans = extract_pipeline(docs, job).withColumn("bucket", salt_column(nb))
+        # Spread here whatever the scan's partition count, so a bucket
+        # directory gets files only from the partitions holding its
+        # documents; extract_pipeline then adds no exchange of its own.
+        docs = spread(subset.select("doc_id", "spans"), job.shuffle_partitions)
+        spans = extract_pipeline(docs, job).withColumn("bucket", bucket_of(nb))
         spans.write.mode("overwrite").partitionBy("bucket").format("parquet").save(
             output_path
         )
@@ -180,6 +167,7 @@ def run_resumable(
                         {
                             "input": input_path,
                             "num_buckets": nb,
+                            "bucket": layout,
                             "wave": wave,
                             "chunker": {
                                 "max_chunk_size": job.chunker.max_chunk_size,

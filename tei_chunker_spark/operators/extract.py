@@ -110,6 +110,18 @@ def _partitions(df: DataFrame) -> int:
     return df.rdd.getNumPartitions()
 
 
+def spread(df: DataFrame, num_partitions: int) -> DataFrame:
+    """The one device that places a document on a partition: the one
+    ``bucket_of(num_partitions)`` gives its doc_id."""
+    return df.repartition(num_partitions, "doc_id")
+
+
+def bucket_of(num_buckets: int) -> Column:
+    """``pmod(hash(doc_id), num_buckets)``: Murmur3 with seed 42, the hash
+    of Spark's ``HashPartitioning`` and so of :func:`spread`."""
+    return F.pmod(F.hash("doc_id"), F.lit(num_buckets))
+
+
 def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
     """The shared head of every extraction-family pipeline, and the one
     place that decides whether its input needs spreading.
@@ -119,16 +131,16 @@ def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
     stage: an exchange there adds no concurrency, only a full copy of the
     input and P Python tasks in place of its own (each task pays a fixed
     boundary cost).  A file scan with enough splits, a round-robin
-    repartition to the core count and the resumable runner's salted waves
+    repartition to the core count and the resumable runner's spread waves
     are such inputs.  Every other input (streaming, too few partitions, or
-    a count only a job could read) is hash-repartitioned on doc_id into
+    a count only a job could read) gets :func:`spread` into
     P = shuffle_partitions partitions, and reassembly runs in the P-way
     stage after it."""
     df = df.select("doc_id", "spans")
     p = job.shuffle_partitions
     cores = df.sparkSession.sparkContext.defaultParallelism
     if df.isStreaming or _partitions(df) < min(p, cores):
-        return df.repartition(p, "doc_id")
+        return spread(df, p)
     return df
 
 

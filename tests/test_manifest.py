@@ -3,6 +3,8 @@ and no missing spans vs a single-shot run (BASELINE.md resumability row).
 """
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 
 from tei_chunker_spark.config import ChunkerConfig, JobConfig
@@ -86,32 +88,70 @@ def test_rerun_completed_job_is_noop(spark, corpus_path, tmp_path):
     assert read_manifest(spark, manifest).count() == n_manifest  # nothing re-done
 
 
-def test_waves_keep_the_salt_exchange(spark, corpus_path, tmp_path, monkeypatch):
-    """Each wave is salted even though its scan alone fills the cores, so
-    a bucket directory gets files only from the shuffle partitions that
-    hold its rows: one, as num_buckets == shuffle_partitions."""
+@pytest.mark.parametrize(
+    "num_buckets, wave_size, exchanges",
+    [(8, 3, [1, 1, 1]), (4, 4, [1])],
+    ids=["8_buckets", "4_buckets"],
+)
+def test_waves_spread_one_bucket_per_partition(
+    spark, corpus_path, tmp_path, monkeypatch, num_buckets, wave_size, exchanges
+):
+    """Each wave is spread on doc_id even though its scan alone fills the
+    cores, and a bucket is the spread's own hash mod num_buckets: every
+    partition p of a wave's Python stage holds the rows of bucket
+    p % num_buckets, if that bucket is in the wave, and of no other.  So
+    with num_buckets dividing P, a one-wave run fills all P partitions
+    and each bucket directory gets P / num_buckets files."""
+    from pyspark.sql import functions as F
     from pyspark.sql.readwriter import DataFrameWriter
 
     from tei_chunker_spark.plans.explain import count_exchanges
 
+    job = replace(JOB, num_buckets=num_buckets)
+    p = job.shuffle_partitions
     out = tmp_path / "out"
     assert spark.read.parquet(corpus_path).rdd.getNumPartitions() >= min(
-        JOB.shuffle_partitions, spark.sparkContext.defaultParallelism
+        p, spark.sparkContext.defaultParallelism
     )
-    exchanges = []
+    exchanges_seen, placed = [], set()
     save = DataFrameWriter.save
 
     def counting_save(self, path=None, *args, **kwargs):
         if path == str(out):
-            exchanges.append(count_exchanges(self._df))
+            exchanges_seen.append(count_exchanges(self._df))
+            placed.update(
+                tuple(r) for r in self._df.select(
+                    F.spark_partition_id(), "bucket").distinct().collect()
+            )
         return save(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "save", counting_save)
     run_resumable(
-        spark, corpus_path, str(out), str(tmp_path / "m"), JOB, job_id="salted", wave_size=3
+        spark, corpus_path, str(out), str(tmp_path / "m"), job, job_id="spread",
+        wave_size=wave_size,
     )
-    assert exchanges == [1, 1, 1]
+    assert exchanges_seen == exchanges
+    assert placed == {(part, part % num_buckets) for part in range(p)}
     buckets = sorted(out.glob("bucket=*"))
-    assert len(buckets) == JOB.num_buckets
+    assert len(buckets) == num_buckets
     for bucket in buckets:
-        assert len(list(bucket.glob("*.parquet"))) == 1, bucket
+        assert len(list(bucket.glob("*.parquet"))) == p // num_buckets, bucket
+
+
+def test_resume_refuses_another_bucket_layout(spark, corpus_path, tmp_path):
+    """A manifest written at num_buckets=8 names other documents by its
+    bucket ids than a run at 4 would, so resuming the crashed job at 4
+    raises before it writes anything, instead of skipping the documents
+    of the buckets it takes as done."""
+    out = tmp_path / "out"
+    manifest = str(tmp_path / "manifest")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, corpus_path, str(out), manifest, JOB,
+                      job_id="relaid", wave_size=3, fail_after_waves=1)
+    n_manifest = read_manifest(spark, manifest).count()
+    files = sorted(out.rglob("*.parquet"))
+    with pytest.raises(ValueError, match=r"relaid.*pmod\(hash\(doc_id\), 8\).*, 4\)"):
+        run_resumable(spark, corpus_path, str(out), manifest,
+                      replace(JOB, num_buckets=4), job_id="relaid", wave_size=3)
+    assert read_manifest(spark, manifest).count() == n_manifest
+    assert sorted(out.rglob("*.parquet")) == files

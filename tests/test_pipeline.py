@@ -164,21 +164,30 @@ def test_spread_fills_every_partition(spark):
 
 
 def test_salting_distribution(spark):
-    """The salt spreads documents near-uniformly across buckets so no
-    partition inherits a disproportionate share (the skew defense)."""
-    from tei_chunker_spark.manifest import salt_column
+    """The bucket hash spreads documents near-uniformly across buckets so
+    no partition inherits a disproportionate share (the skew defense),
+    and it is the spread's own partition hash: if Spark ever changed its
+    partition hash, buckets would scatter across partitions."""
+    from pyspark.sql import functions as F
+
+    from tei_chunker_spark.operators.extract import bucket_of, spread
 
     rows = make_rows([f"s{i}" for i in range(400)])
     df = _input_df(spark, rows)
     counts = [
         r.n
-        for r in df.select(salt_column(16).alias("b"))
+        for r in df.select(bucket_of(16).alias("b"))
         .groupBy("b")
-        .agg(__import__("pyspark").sql.functions.count("*").alias("n"))
+        .agg(F.count("*").alias("n"))
         .collect()
     ]
     assert len(counts) == 16  # every bucket hit
     assert max(counts) < 3 * min(counts)  # no gross imbalance at n=400
+    p = JOB.shuffle_partitions
+    placed = spread(df.select("doc_id"), p).select(
+        (bucket_of(p) == F.spark_partition_id()).alias("same")
+    )
+    assert {r.same for r in placed.collect()} == {True}
 
 
 def _spread_repartitions(df) -> int:

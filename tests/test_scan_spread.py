@@ -16,16 +16,15 @@ PKG = REPO / "tei_chunker_spark"
 TABLES = PKG / "sources" / "tables.py"
 
 # name -> (file, function) pairs allowed to use it outside tables.py:
-# the synthetic corpus spreads its generation; the extraction spread is a
-# hash repartition on doc_id, not a scan spread, that ``_salted`` adds
-# only where the input does not already fill the cores; and each
-# resumable wave gets its bucket-aligned salt exchange.
+# the synthetic corpus spreads its generation; the doc_id spread
+# (``extract.spread``) is a hash repartition, not a scan spread, that
+# ``_salted`` adds only where the input does not already fill the cores
+# and the resumable runner adds to each wave, so a bucket is its hash.
 _ALLOWED = {
     ("__spark_entry__.py", "_interleaved_corpus", "repartition"),
     ("__spark_entry__.py", "_interleaved_corpus", "defaultParallelism"),
-    ("tei_chunker_spark/operators/extract.py", "_salted", "repartition"),
+    ("tei_chunker_spark/operators/extract.py", "spread", "repartition"),
     ("tei_chunker_spark/operators/extract.py", "_salted", "defaultParallelism"),
-    ("tei_chunker_spark/manifest.py", "salt_exchange", "repartition"),
 }
 _SPREAD_NAMES = {"repartition", "defaultParallelism", "getsize", "ParquetFile",
                  "read_metadata"}
@@ -80,6 +79,12 @@ def test_scan_spread_only_in_tables_module():
         assert src.count(call) == 1, call
     extract = (PKG / "operators" / "extract.py").read_text(encoding="utf-8")
     assert extract.count(".repartition(") == 1
+    on_doc_id = [
+        line for p in sorted(PKG.rglob("*.py"))
+        for line in p.read_text(encoding="utf-8").splitlines()
+        if "repartition(" in line and "doc_id" in line
+    ]
+    assert len(on_doc_id) == 1, on_doc_id
 
 
 @pytest.mark.parametrize("helper", [E._docs_with_exact_dups, E._docs_with_near_dups])
